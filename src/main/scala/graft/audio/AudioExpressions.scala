@@ -145,6 +145,11 @@ object expressions {
   def expected_transcript(clipId: Column): Column =
     ColumnBridge.toCol(ExpectedTranscript(ColumnBridge.toExpr(clipId)))
 
+  /** Decode stats of one payload, see [[PcmStats]]. Project it into a
+    * column before using it inside `agg()` or a join condition: the
+    * expression is declared non-deterministic to keep the decode to one
+    * evaluation per row, and Spark rejects non-deterministic expressions
+    * in aggregate functions and join conditions with an AnalysisException. */
   def pcm_stats(bytes: Column, codec: Column): Column =
     ColumnBridge.toCol(PcmStats(ColumnBridge.toExpr(bytes), ColumnBridge.toExpr(codec)))
 }

@@ -1,7 +1,7 @@
 package graft.audit
 
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.run.ValidationPlan
 
@@ -100,23 +100,22 @@ object CheckpointedRun {
         processed += 1
         val started = System.currentTimeMillis()
         val df = spark.read.parquet(unit)
-        // violations for this unit: idempotent overwrite of the unit's dir
+        // violations for this unit: idempotent overwrite of the unit's dir.
+        // The metrics are observed on the staged (keys, violations) frame
+        // of that same write, so the battery runs once per row and the
+        // unit costs one query. `sum` over a zero-row unit is NULL.
         val vioDir = s"$auditDir/violations/$runId/${unitId(unit)}"
-        plan.violations(df, keyCols).write.mode("overwrite").parquet(vioDir)
-        // metrics in one pass; the violations array is staged ONCE behind
-        // an OnceBarrier — the old form put `!isValidCol` and
-        // `size(violationsCol)` as two separate aggregate expressions,
-        // each carrying its own full copy of the check battery (codegen
-        // CSE does not extract conditional-branch subexpressions), so
-        // every row ran all checks twice. `size(_vio) > 0 ⇔ !isValidCol`
-        // (a NULL row verdict yields an empty array on both definitions).
-        val staged = df.withColumn("_vio",
-          graft.functions.OnceBarrier.once(plan.violationsCol))
-        val m = staged.agg(
+        val metrics = Observation()
+        val nVio = size(col("violations"))
+        val staged = plan.stagedViolations(df, keyCols).observe(metrics,
           count(lit(1)).as("rows"),
-          sum(when(size(col("_vio")) > 0, 1L).otherwise(0L)).as("invalid"),
-          sum(size(col("_vio"))).as("violations")).collect()(0)
-        val rows = m.getLong(0); val inv = m.getLong(1); val vio = m.getLong(2)
+          coalesce(sum(when(nVio > 0, 1L).otherwise(0L)), lit(0L)).as("invalid"),
+          coalesce(sum(nVio), lit(0L)).as("violations"))
+        plan.explodeStaged(staged, keyCols).write.mode("overwrite").parquet(vioDir)
+        val m = metrics.get
+        val rows = m("rows").asInstanceOf[Long]
+        val inv = m("invalid").asInstanceOf[Long]
+        val vio = m("violations").asInstanceOf[Long]
         // atomic commit: temp file + rename
         // single line: the audit log is read as JSON-lines
         val rec =

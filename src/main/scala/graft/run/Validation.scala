@@ -12,10 +12,11 @@ import graft.spec.Spec
   * plan is pure `Column` expressions, so Spark serializes it to executors
   * with the physical plan; nothing is interpreted per row outside codegen.
   *
-  * The four evaluation modes map to the reference's API verbs:
+  * The five evaluation modes map to the reference's API verbs:
   *  - `isValid`      ← `Validator::is_valid`   (validator.rs:500-503)
   *  - `firstError`   ← `Validator::validate`   (fail-fast, validator.rs:482)
   *  - `violations`   ← `Validator::iter_errors` (validator.rs:490-494)
+  *  - `outputV1`     ← `Validator::evaluate` (flag/list/hierarchical, evaluation.rs:212-560)
   *  - `verdicts`     ← `evaluate().flag()` per partition (evaluation.rs:245)
   */
 final case class ValidationPlan(checks: Vector[Check],
@@ -48,18 +49,10 @@ final case class ValidationPlan(checks: Vector[Check],
     }: _*)
   }
 
-  /** Annotation rows per input row — `Validator::iter_annotations`. */
+  /** Annotation rows per input row — `Validator::iter_annotations`.
+    * Staged and exploded like `violations()`. */
   def iterAnnotations(df: DataFrame, keyCols: Seq[String]): DataFrame =
-    // no size(...) pre-filter: explode drops empty arrays, and the filter
-    // would be pushed below the projection with the whole annotations
-    // expression duplicated into it (see violations())
-    df.select(keyCols.map(col) :+ annotationsCol.as("annotations"): _*)
-      .select(keyCols.map(col) :+ explode(col("annotations")).as("_ann"): _*)
-      .select(keyCols.map(col) ++ Seq(
-        col("_ann.keyword").as("keyword"),
-        col("_ann.schema_path").as("schema_path"),
-        col("_ann.instance_path").as("instance_path"),
-        col("_ann.value").as("value")): _*)
+    explodeStaged(pinned(df, keyCols, "annotations", annotationsCol), keyCols)
 
   /** JSON-Schema Output v1 document column (flag/list/hierarchical),
     * shaped to validate against the official output schema
@@ -186,25 +179,33 @@ final case class ValidationPlan(checks: Vector[Check],
 
   /** Violation rows: one output row per failed check, carrying the given
     * key columns — our primary output per the north rule. */
-  def violations(df: DataFrame, keyCols: Seq[String]): DataFrame = {
-    // OnceBarrier + no pre-filter on size(violations): `explode` already
-    // drops empty arrays, and both an explicit `.where(size > 0)` AND the
-    // optimizer's InferFiltersFromGenerate get pushed BELOW the projection
-    // with the whole violations expression inlined into the filter
-    // condition — every row then evaluates the full check battery
-    // (regexes, messages) TWICE (guide §4.4's duplication, verified in
-    // the r06 plan dumps). The barrier pins the expression to this
-    // projection; the inferred filter stays above it on the attribute.
-    val keyed = df.select(keyCols.map(col) :+
-      graft.functions.OnceBarrier.once(violationsCol).as("violations"): _*)
-    keyed
-      .select(keyCols.map(col) :+ explode(col("violations")).as("v"): _*)
-      .select(keyCols.map(col) ++ Seq(
-        col("v.keyword").as("keyword"),
-        col("v.schema_path").as("schema_path"),
-        col("v.instance_path").as("instance_path"),
-        col("v.message").as("message")): _*)
-  }
+  def violations(df: DataFrame, keyCols: Seq[String]): DataFrame =
+    explodeStaged(stagedViolations(df, keyCols), keyCols)
+
+  /** The `(keys, violations)` projection that `violations()` explodes.
+    * `CheckpointedRun` observes its unit metrics on this frame, so the
+    * write and the metrics share one evaluation of the battery. */
+  private[graft] def stagedViolations(df: DataFrame, keyCols: Seq[String]): DataFrame =
+    pinned(df, keyCols, "violations", violationsCol)
+
+  /** `keyCols` plus one array column, pinned to this projection by an
+    * OnceBarrier. No pre-filter on the array's size: `explode` already
+    * drops empty arrays, and both an explicit `.where(size > 0)` AND the
+    * optimizer's InferFiltersFromGenerate get pushed BELOW the projection
+    * with the whole array expression inlined into the filter condition —
+    * every row then evaluates the full check battery (regexes, messages)
+    * TWICE (guide §4.4's duplication, verified in the r06 plan dumps). The
+    * barrier keeps the inferred filter above the projection, on the
+    * attribute. */
+  private def pinned(df: DataFrame, keyCols: Seq[String], name: String,
+                     arr: Column): DataFrame =
+    df.select(keyCols.map(col) :+ graft.functions.OnceBarrier.once(arr).as(name): _*)
+
+  /** One row per element of `staged`'s array column (its last column),
+    * the element's struct fields flattened next to the keys. */
+  private[graft] def explodeStaged(staged: DataFrame, keyCols: Seq[String]): DataFrame =
+    staged.select(keyCols.map(col) :+ explode(col(staged.columns.last)).as("_e"): _*)
+      .select(keyCols.map(col) :+ col("_e.*"): _*)
 
   /** Per-partition pass/fail verdict + counts — the analog of
     * `evaluate().flag()` scoped to a partition (`evaluation.rs:245`),
@@ -216,34 +217,6 @@ final case class ValidationPlan(checks: Vector[Check],
         every(col("valid")).as("pass"),
         count(lit(1)).as("rows"),
         sum(when(!col("valid"), 1L).otherwise(0L)).as("invalid_rows"))
-
-  /** JSON-Schema-Output-style evaluation column (the `evaluate` verb,
-    * `evaluation.rs:212-560`): "flag" → struct(valid); "list" → every
-    * check's outcome (annotation-style, hot+cold both evaluated); or
-    * "hierarchical" → outcomes grouped per instance location. */
-  def evaluationCol(format: String): Column = format match {
-    case "flag" => struct(isValidCol.as("valid"))
-    case "list" =>
-      struct(isValidCol.as("valid"),
-        array(checks.map(ch => struct(
-          lit(ch.keyword).as("keyword"),
-          lit(ch.schemaPath).as("schema_path"),
-          lit(ch.instancePath).as("instance_path"),
-          ch.predicate.as("valid"))): _*).as("details"))
-    case "hierarchical" =>
-      val groups = checks.groupBy(_.instancePath).toSeq.sortBy(_._1)
-      struct(isValidCol.as("valid"),
-        array(groups.map { case (path, cs) =>
-          struct(
-            lit(path).as("instance_path"),
-            cs.map(_.predicate).reduce(_ && _).as("valid"),
-            array(cs.map(ch => struct(
-              lit(ch.keyword).as("keyword"),
-              lit(ch.schemaPath).as("schema_path"),
-              ch.predicate.as("valid"))): _*).as("checks"))
-        }: _*).as("details"))
-    case other => throw new IllegalArgumentException(s"unknown output format: $other")
-  }
 
   /** Per-check violation counts over the whole table (one aggregation
     * pass, map-side partial aggregation — no shuffle of row data). */

@@ -1,6 +1,7 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 import graft.spec._
 import graft.run.Validation
@@ -97,14 +98,16 @@ class ApiVerbsSpec extends AnyFunSuite {
     val df = Seq((1, "abc"), (-1, "x")).toDF("a", "b")
     val plan = Validation.compile(
       """{"properties":{"a":{"minimum":0},"b":{"minLength":2}}}""", df.schema)
-    val flag = df.select(plan.evaluationCol("flag").as("e")).collect()
-    assert(flag(0).getStruct(0).getBoolean(0) && !flag(1).getStruct(0).getBoolean(0))
-    val list = df.select(plan.evaluationCol("list").as("e")).collect()
-    val details = list(1).getStruct(0).getSeq[org.apache.spark.sql.Row](1)
-    assert(details.length == 2 && details.forall(!_.getBoolean(3)))
-    val hier = df.select(plan.evaluationCol("hierarchical").as("e")).collect()
-    val groups = hier(1).getStruct(0).getSeq[org.apache.spark.sql.Row](1)
-    assert(groups.map(_.getString(0)).toSet == Set("/a", "/b"))
+    def eval(format: String) =
+      df.select(plan.outputV1(format).as("e")).collect().map(_.getStruct(0))
+    def details(r: Row) = r.getSeq[Row](r.fieldIndex("details"))
+    val flag = eval("flag")
+    assert(flag(0).getAs[Boolean]("valid") && !flag(1).getAs[Boolean]("valid"))
+    // the failing row: both checks fail, and every detail says so
+    val list = details(eval("list")(1))
+    assert(list.length == 2 && list.forall(!_.getAs[Boolean]("valid")))
+    val hier = details(eval("hierarchical")(1))
+    assert(hier.map(_.getAs[String]("instanceLocation")).toSet == Set("/a", "/b"))
   }
 
   test("firstError is fail-fast in priority order") {

@@ -1,6 +1,8 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.grafttest.ListenerDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import graft.audit.CheckpointedRun
@@ -9,6 +11,21 @@ import graft.streaming.StreamingValidation
 
 class AuditStreamingSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
+
+  /** Spark jobs started while `body` runs, added to `jobs`. */
+  private val jobs = new java.util.concurrent.atomic.AtomicInteger
+  private def jobsDuring[A](body: => A): A = {
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    ListenerDrain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    try body
+    finally {
+      ListenerDrain(spark.sparkContext)
+      spark.sparkContext.removeSparkListener(listener)
+    }
+  }
 
   val ordersSpec = """{
     "properties": {"o_totalprice": {"maximum": 200000}},
@@ -31,17 +48,20 @@ class AuditStreamingSpec extends AnyFunSuite {
 
     // crash after 2 units
     val crash = intercept[RuntimeException] {
-      CheckpointedRun.run(spark, tableDir, plan, auditDir, "run1",
-        Seq("o_orderkey"), failAfterUnits = 2)
+      jobsDuring(CheckpointedRun.run(spark, tableDir, plan, auditDir, "run1",
+        Seq("o_orderkey"), failAfterUnits = 2))
     }
     assert(crash.getMessage.contains("injected failure"))
     val committed = CheckpointedRun.auditLog(spark, auditDir, "run1")
     assert(committed.count() == 2)
 
     // resume: completes, skips the 2 committed units
-    val summary = CheckpointedRun.run(spark, tableDir, plan, auditDir, "run1",
-      Seq("o_orderkey"))
+    val summary = jobsDuring(CheckpointedRun.run(spark, tableDir, plan, auditDir, "run1",
+      Seq("o_orderkey")))
     assert(summary.resumedUnits == 2)
+    // one query per processed unit (the violations write, with the unit's
+    // metrics observed on it): at most 2 jobs each, over 4 processed units
+    assert(jobs.get() <= 2 * 4, s"${jobs.get()} jobs for 4 processed units")
     assert(summary.rows == expectRows)
     assert(summary.invalidRows == expectInvalid)
 
@@ -54,6 +74,7 @@ class AuditStreamingSpec extends AnyFunSuite {
     // violations materialized per unit, total matches a direct run
     val vio = spark.read.parquet(s"$auditDir/violations/run1/*")
     assert(vio.count() == plan.violations(df, Seq("o_orderkey")).count())
+    assert(log.agg(sum("violations")).collect()(0).getLong(0) == vio.count())
 
     // idempotence: a third run skips everything
     val again = CheckpointedRun.run(spark, tableDir, plan, auditDir, "run1",
@@ -70,6 +91,23 @@ class AuditStreamingSpec extends AnyFunSuite {
         Seq("o_orderkey"), failAfterUnits = 0)
     }
     assert(mismatch.getMessage.contains("plan_fingerprint"))
+  }
+
+  test("checkpointed run: a zero-row unit commits zero metrics") {
+    val orders = spark.read.parquet("/root/testdata/sf0.001/orders.parquet")
+    val tableDir = java.nio.file.Files.createTempDirectory("graft_table").toString
+    orders.limit(0).write.mode("overwrite").parquet(tableDir)
+    val emptyUnits = CheckpointedRun.listUnits(tableDir)
+    assert(emptyUnits.size == 1)
+    orders.write.mode("append").parquet(tableDir)
+    val plan = Validation.compile(ordersSpec, orders.schema)
+    val auditDir = java.nio.file.Files.createTempDirectory("graft_audit").toString
+    val summary = CheckpointedRun.run(spark, tableDir, plan, auditDir, "run0",
+      Seq("o_orderkey"))
+    val empty = summary.units.find(_.unit == emptyUnits.head).get
+    assert((empty.rows, empty.invalidRows, empty.violations) == ((0L, 0L, 0L)))
+    assert(summary.rows == orders.count())
+    assert(summary.invalidRows == orders.where(!plan.isValidCol).count())
   }
 
   // readStream needs a directory source

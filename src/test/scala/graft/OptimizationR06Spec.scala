@@ -139,15 +139,22 @@ class OptimizationR06Spec extends AnyFunSuite {
     val orders = spark.read.parquet("/root/testdata/sf0.001/orders.parquet")
     val plan = graft.run.Validation.compile(
       """{"properties":{"o_orderpriority":{"pattern":"^[1-5]-"}}}""", orders.schema)
-    val q = plan.violations(orders, Seq("o_orderkey"))
-    val s = q.queryExecution.optimizedPlan.toString
+    // an annotation whose active condition carries its `pattern` sibling
+    val annotated = graft.run.Validation.compile(
+      """{"properties":{"o_orderpriority":{"pattern":"^[1-5]-","x-note":1}}}""", orders.schema)
+    assert(annotated.annotations.nonEmpty)
     // the projection legitimately carries two textual predicate sites
     // (hot guard + cold per-entry branch); the pre-r06 defect was a THIRD
     // copy pushed into the size(...) > 0 filter below the projection
     // (explicitly or via InferFiltersFromGenerate). The OnceBarrier keeps
     // the filter on the attribute: no Filter line may contain the battery.
-    val filterLines = s.linesIterator.filter(_.trim.startsWith("+- Filter")).toSeq
-    assert(filterLines.nonEmpty && filterLines.forall(!_.contains("RLIKE")), s)
+    for (q <- Seq(plan.violations(orders, Seq("o_orderkey")),
+                  annotated.iterAnnotations(orders, Seq("o_orderkey")))) {
+      val s = q.queryExecution.optimizedPlan.toString
+      val filterLines = s.linesIterator.filter(_.trim.startsWith("+- Filter")).toSeq
+      assert(s.contains("RLIKE"), s)
+      assert(filterLines.nonEmpty && filterLines.forall(!_.contains("RLIKE")), s)
+    }
   }
 
   test("x-audio-snr predicate carries a single decode+synthesis site") {
