@@ -11,12 +11,19 @@ import graft.table.TableChecks
   * Prints ONE JSON line. */
 object Bench {
 
+  /** Where the clips fixture for (generator version, n, partitions) lives:
+    * a fixture written by an older generator is never reused. */
+  private def clipsFixturePath(n: Long, partitions: Int): String =
+    s"/tmp/graft_bench/clips_v${ClipsGen.Version}_n${n}_p$partitions"
+
+  private def fixtureExists(path: String): Boolean =
+    new java.io.File(s"$path/_SUCCESS").exists()
+
   /** Clips parquet fixture (generated once per (n, seed), reused). The
     * benchmark then measures VALIDATION cost from parquet, not synthesis. */
   def clipsFixture(spark: SparkSession, n: Long, partitions: Int): String = {
-    val path = s"/tmp/graft_bench/clips_n${n}_p$partitions"
-    val ok = new java.io.File(s"$path/_SUCCESS").exists()
-    if (!ok) {
+    val path = clipsFixturePath(n, partitions)
+    if (!fixtureExists(path)) {
       ClipsGen.generate(spark, n, partitions, corruptionRate = 0.01)
         .write.mode("overwrite").parquet(path)
     }
@@ -215,21 +222,9 @@ object Bench {
     val loadBefore = loadavg()
     val ticks0 = cpuTicks()
     val rawBefore = rawKernel32()
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      // explicit partition sizing so the clips scan yields >= cores splits
-      .config("spark.sql.files.maxPartitionBytes", s"${16 * 1024 * 1024}")
-      .config("spark.sql.files.openCostInBytes", s"${1024 * 1024}")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.create(cpus.toInt, smallSplits = true)
 
-    val fixtureExisted =
-      new java.io.File(s"/tmp/graft_bench/clips_n${nClips}_p${cpus.toInt * 4}/_SUCCESS").exists()
+    val fixtureExisted = fixtureExists(clipsFixturePath(nClips, cpus.toInt * 4))
     val clipsPath = clipsFixture(spark, nClips, cpus.toInt * 4)
 
     val results = scala.collection.mutable.LinkedHashMap[String, Double]()

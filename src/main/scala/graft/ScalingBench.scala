@@ -42,20 +42,10 @@ object ScalingBench {
   }
 
   // ---- Spark job at one parallelism level ------------------------------
-  private def run(cores: Int, clipsPath: String, repeats: Int): Double = {
-    val spark = SparkSession.builder()
-      .master(s"local[$cores]")
-      .appName(s"graft-scaling-$cores")
-      .config("spark.sql.shuffle.partitions", math.max(cores, 2))
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.ansi.enabled", "false")
-      // explicit partition sizing (north rule): without this the scan
-      // coalesces the input into ~10 x 128MB splits and 32 cores starve
-      .config("spark.sql.files.maxPartitionBytes", s"${16 * 1024 * 1024}")
-      .config("spark.sql.files.openCostInBytes", s"${1024 * 1024}")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+  private def run(cores: Int, nClips: Long, repeats: Int): Double = {
+    val spark = Sessions.create(cores, smallSplits = true)
+    // generated by the first level's session, reused by every later one
+    val clipsPath = Bench.clipsFixture(spark, nClips, 64)
     Bench.validateClips(spark, clipsPath) // warmup
     val times = (1 to repeats).map { _ =>
       val t0 = System.nanoTime()
@@ -75,21 +65,13 @@ object ScalingBench {
     val rounds = sys.env.getOrElse("SPARK_GRAFT_ROUNDS", "3").toInt
     val levels = Seq(2, 8, 32)
 
-    val boot = SparkSession.builder().master("local[8]")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    boot.sparkContext.setLogLevel("WARN")
-    val clipsPath = Bench.clipsFixture(boot, nClips, 64)
-    boot.stop()
-    SparkSession.clearActiveSession(); SparkSession.clearDefaultSession()
-
     val raw = rawCalibration(levels)
     println(levels.map(l => f"raw[$l]=${raw(l)}%.2fs").mkString("[scaling] hardware: ", " ", ""))
 
     // interleaved rounds, min per level (steal-robust)
     val mins = scala.collection.mutable.Map[Int, Double]().withDefaultValue(Double.MaxValue)
     for (_ <- 1 to rounds; l <- levels)
-      mins(l) = math.min(mins(l), run(l, clipsPath, repeats))
+      mins(l) = math.min(mins(l), run(l, nClips, repeats))
 
     def eff(a: Int, b: Int, t: Int => Double): Double = (t(a) / t(b)) / (b.toDouble / a)
     val sparkT = (l: Int) => mins(l)

@@ -360,7 +360,9 @@ object SparkEntry {
     //    verified with exact hamming — so banded output must EQUAL the
     //    brute-force all-pairs set. DuckDB cannot compute xxhash-based
     //    simhash, so the query emits the set-equality verdict (both
-    //    directions) + the hamming-bound invariant.
+    //    directions) + the hamming-bound invariant. Verification scale
+    //    only: the brute-force side is an all-pairs self-join, quadratic
+    //    in documents.
     "q_docs_simhash" -> ((s, dir) => {
       val withH = t(s, dir, "documents")
         .select(col("doc_id").as("id"), TextOps.simhash(col("text")).as("h"))
@@ -425,7 +427,9 @@ object SparkEntry {
           .otherwise(0L)), lit(0L)) >= 4L).as("recall_at_5_ok"))
     }),
 
-    // -- dedup: embedding-cosine near-dup, exact all-pairs (oracle path) --
+    // -- dedup: embedding-cosine near-dup, exact all-pairs (oracle path).
+    //    Verification scale only: quadratic in embeddings; the scale path
+    //    is q_emb_near_dup_lsh --------------------------------------------
     "q_emb_near_dup_exact" -> ((s, dir) => {
       Ann.cosineNearDupsExact(t(s, dir, "embeddings"), "vec_id", "embedding", 0.4)
         .orderBy("id_a", "id_b")

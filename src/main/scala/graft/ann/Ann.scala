@@ -238,10 +238,12 @@ object Ann {
     * (compiled dot kernels; the scores array is codegen'd), one
     * (list, dimension) shuffle to average members, then centroids are
     * re-normalized on the driver (spherical k-means ⇒ dot ≡ cosine on
-    * normalized inputs). Empty lists keep their previous centroid. */
+    * normalized inputs). Empty lists keep their previous centroid. Rows
+    * with a null vector take no part in training: they can be neither a
+    * seed nor a member of any list. */
   def ivfTrain(df: DataFrame, idCol: String, vecCol: String,
                nLists: Int, iters: Int = 5, seed: Long = 42L): Array[Array[Double]] = {
-    val src = df.select(col(idCol).as("id"), col(vecCol).as("v"))
+    val src = df.where(col(vecCol).isNotNull).select(col(idCol).as("id"), col(vecCol).as("v"))
     def normalize(c: Array[Double]): Array[Double] = {
       val n = math.sqrt(c.map(x => x * x).sum)
       if (n == 0) c else c.map(_ / n)

@@ -14,6 +14,12 @@ case class Clip(clip_id: String, bytes: Array[Byte], sr_hz: Int,
   */
 object ClipsGen {
 
+  /** Generator version, part of every cached fixture's path. Bump it when
+    * a change alters the bytes `clipAt` produces — r06's phasor-recurrence
+    * `Pcm.synthesize` differs from the direct form by up to 1 LSB, enough
+    * to move a lossless clip off the exact 120 dB SNR cap. */
+  final val Version = 6
+
   val SampleRates: Seq[Int] = Seq(8000, 16000, 22050, 24000, 44100, 48000)
   val HotClipId = "clip-00000000feedface"
 

@@ -25,20 +25,9 @@ object Main {
   private def readFile(p: String): String =
     new String(java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(p)), "UTF-8")
 
-  private def sparkSession(): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", s"local[$cpus]"))
-      .appName("graft-cli")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark
-  }
+  private def sparkSession(): SparkSession = graft.Sessions.create(
+    sys.env.get("SPARK_GRAFT_CPUS").fold(Runtime.getRuntime.availableProcessors())(_.toInt),
+    sys.env.get("SPARK_MASTER"))
 
   def main(args: Array[String]): Unit = {
     val specVerbs = Set("canonicalize", "dereference", "bundle", "meta", "check")

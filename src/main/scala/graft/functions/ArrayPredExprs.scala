@@ -52,7 +52,11 @@ abstract class ElemLoopExpr extends UnaryExpression {
 }
 
 /** Three-valued forall over an array, matching `forall(c, f)` exactly:
-  * any false → false; else any null → null; else true; null array → null. */
+  * any false → false; else any null → null; else true; null array → null.
+  * Unlike `forall`, it stops at the first false element: an element
+  * predicate that could throw on a later element (an ANSI-mode cast or
+  * regex error) yields false here where the HOF form would raise. Sessions
+  * run with ANSI off, so the two agree. */
 case class ForallElems(child: Expression, elemPred: Expression) extends ElemLoopExpr {
   override def dataType: DataType = BooleanType
   override def nullable: Boolean = true

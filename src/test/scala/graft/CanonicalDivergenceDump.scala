@@ -3,7 +3,10 @@ package graft
 import graft.spec._
 
 /** Dev probe: print every outstanding form divergence for the ratcheted
-  * canonical-suite files (ours vs reference expected). */
+  * canonical-suite files (ours vs reference expected); a form the file
+  * lists as an alternative expected result is not a divergence. Other
+  * files go as arguments:
+  * `sbt "Test/runMain graft.CanonicalDivergenceDump algebra.json"`. */
 object CanonicalDivergenceDump {
   def main(args: Array[String]): Unit = {
     val spec = new CanonicalFormSpec

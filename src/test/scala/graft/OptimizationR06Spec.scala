@@ -179,6 +179,26 @@ class OptimizationR06Spec extends AnyFunSuite {
       k = 5, nProbe = 4).collect().map(_.getLong(0)).toSeq
     val brute = Ann.topKCosine(df, "v", "id", q, 5).collect().map(_.getLong(0)).toSeq
     assert(ivf == brute)
+
+    // every 10th vector null, one of them among the seed rows: training
+    // skips them (a null seed threw a NullPointerException, a null-vector
+    // group ROW_VALUE_IS_NULL on its list id)
+    val withNulls = rows.map(r => if (r.id % 10 == 0) Vec(r.id, null) else r).toDF()
+    val nonNull = withNulls.where(col("v").isNotNull)
+    val cn = Ann.ivfTrain(withNulls, "id", "v", nLists = 4, iters = 3)
+    assert(cn.length == 4 && cn.forall(_.forall(x => !x.isNaN && !x.isInfinite)))
+    val qn = rows(1).v.toArray
+    val ivfN = Ann.ivfTopK(Ann.ivfAssign(nonNull, "id", "v", cn), "id", "v", cn, qn,
+      k = 5, nProbe = 4).collect().map(_.getLong(0)).toSeq
+    val bruteN = Ann.topKCosine(nonNull, "v", "id", qn, 5).collect().map(_.getLong(0)).toSeq
+    assert(ivfN == bruteN)
+  }
+
+  test("q_validate_nested plans the codegen element loops, not the HOF fallback") {
+    val q = SparkEntry.queries("q_validate_nested")(spark, "/root/testdata/sf0.001")
+    val p = q.queryExecution.executedPlan.toString.toLowerCase
+    assert(p.contains("forallelems") && p.contains("counttrueelems"), p)
+    assert(!p.contains("lambdafunction"), p)
   }
 }
 

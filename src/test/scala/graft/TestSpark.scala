@@ -2,19 +2,8 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** One shared local session for all suites. ANSI off: JSON-Schema
-  * semantics want null-on-overflow casts, not exceptions. */
+/** One shared local session for all suites, under the project's session
+  * policy (`Sessions`). */
 object TestSpark {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark: SparkSession = Sessions.create(4)
 }
