@@ -32,7 +32,7 @@ object DedupScale {
   }
 
   def main(args: Array[String]): Unit = {
-    val spark = Sessions.create(32)
+    val spark = Sessions.create(Sessions.defaultCores)
 
     def time[A](f: => A): (A, Double) = {
       val t0 = System.nanoTime(); val r = f

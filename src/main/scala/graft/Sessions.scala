@@ -9,6 +9,12 @@ import org.apache.spark.sql.SparkSession
   * Only what callers genuinely vary is a parameter. */
 private[graft] object Sessions {
 
+  /** Core count of the non-harness mains (CLI, `DedupScale`):
+    * `SPARK_GRAFT_CPUS`, else the JVM's processor count. `Bench` and
+    * `Verify` keep their own defaults, which are part of what they measure. */
+  def defaultCores: Int =
+    sys.env.get("SPARK_GRAFT_CPUS").fold(Runtime.getRuntime.availableProcessors())(_.toInt)
+
   /** @param cores       task slots of the default `local[cores]` master, and
     *                    the shuffle partition count
     * @param master      master URL overriding `local[cores]` (e.g. a cluster)

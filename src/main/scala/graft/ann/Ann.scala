@@ -115,11 +115,11 @@ object Ann {
     val er = expectedRecall(threshold, bBits, bBands)
     if (bits > 0 && bands > 0 && er < targetRecall)
       System.err.println(f"[graft] cosineNearDups: explicit bits=$bBits bands=$bBands give " +
-        f"expected recall $er%.3f at threshold $threshold — below target $targetRecall%.2f; " +
+        f"expected recall $er%.3f at threshold $threshold - below target $targetRecall%.2f; " +
         "pass bits=0 to derive params from the S-curve")
     else if (bits <= 0 || bands <= 0)
       System.err.println(f"[graft] cosineNearDups: derived sign-LSH bits=$bBits bands=$bBands " +
-        f"for threshold=$threshold (expected recall ≈ $er%.3f at the threshold)")
+        f"for threshold=$threshold (expected recall ~ $er%.3f at the threshold)")
     // Sign-LSH degenerates as the threshold drops (θ → π/2 flattens the
     // S-curve): few bits per band ⇒ few buckets ⇒ the per-bucket self-join
     // trends quadratic. Below 64 buckets per band, point the caller at the
@@ -127,7 +127,7 @@ object Ann {
     // (VERDICT_r03 "What's wrong" #2).
     if ((1L << bBits) < 64)
       System.err.println(s"[graft] cosineNearDups: only ${1L << bBits} buckets/band at " +
-        s"threshold=$threshold — sign-LSH is near-quadratic in this regime; the " +
+        s"threshold=$threshold - sign-LSH is near-quadratic in this regime; the " +
         "per-(band,bucket) cap bounds the work (drops are logged). For low-threshold " +
         "similarity prefer minhashNearDups (set similarity) or IVF list-local search.")
     cosineNearDupsWith(df, idCol, vecCol, dim, threshold, bBits, bBands, seed, maxBucketSize)
@@ -147,7 +147,7 @@ object Ann {
         .as(Seq("band", "bucket")))
     val capped =
       if (maxBucketSize <= 0) {
-        System.err.println("[graft] cosineNearDups: per-(band,bucket) cap is OFF — an " +
+        System.err.println("[graft] cosineNearDups: per-(band,bucket) cap is OFF - an " +
           "over-full bucket makes the self-join quadratic in its size; set a finite " +
           "maxBucketSize for corpus-scale runs")
         banded
@@ -169,7 +169,7 @@ object Ann {
           banded
         } else {
           System.err.println(s"[graft] cosineNearDups: per-(band,bucket) cap $maxBucketSize " +
-            s"binding — dropped ${over.getLong(0)} row-band assignments across ${over.getLong(1)} " +
+            s"binding - dropped ${over.getLong(0)} row-band assignments across ${over.getLong(1)} " +
             "over-full buckets from candidate generation (recall becomes approximate for " +
             "rows sharing only over-full buckets)")
           val w = Window.partitionBy(col("band"), col("bucket"))

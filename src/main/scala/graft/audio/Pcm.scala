@@ -201,13 +201,6 @@ object Pcm {
     case _        => None
   }
 
-  /** Expected byte length for n samples under a codec. */
-  def bytesPerSample(codec: String): Option[Int] = codec match {
-    case "pcm16" | "dpcm16" => Some(2)
-    case "ulaw8"            => Some(1)
-    case _                  => None
-  }
-
   /** SNR of `decoded` against the reference synthesis for
     * (clipId, srHz, durMs) WITHOUT materializing the reference: the
     * phasor recurrence emits each reference sample and the sig/noise

@@ -25,9 +25,8 @@ object Main {
   private def readFile(p: String): String =
     new String(java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(p)), "UTF-8")
 
-  private def sparkSession(): SparkSession = graft.Sessions.create(
-    sys.env.get("SPARK_GRAFT_CPUS").fold(Runtime.getRuntime.availableProcessors())(_.toInt),
-    sys.env.get("SPARK_MASTER"))
+  private def sparkSession(): SparkSession =
+    graft.Sessions.create(graft.Sessions.defaultCores, sys.env.get("SPARK_MASTER"))
 
   def main(args: Array[String]): Unit = {
     val specVerbs = Set("canonicalize", "dereference", "bundle", "meta", "check")

@@ -1,6 +1,6 @@
 package graft.spec
 
-import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+import com.fasterxml.jackson.databind.JsonNode
 import scala.jdk.CollectionConverters._
 
 /** Minimal JSON value model for constraint specs and test instances.
@@ -112,8 +112,6 @@ object JsonType {
 }
 
 object JsonValue {
-  private val mapper = new ObjectMapper()
-
   /** Direct recursive-descent parse into the value tree. A per-document
     * hot path (the contentSchema kernel parses one document per ROW):
     * avoids jackson's per-call parser/IOContext/buffer setup and its

@@ -89,7 +89,6 @@ object Spec {
     /** Memo for the interpreter's additionalProperties hot path (rebuilt
       * per node visit otherwise). Not part of structural equality. */
     @transient lazy val propertyNameSet: Set[String] = properties.map(_._1).toSet
-    def isUnconstrained: Boolean = this == Spec.empty
   }
 
   val empty: Obj = Obj()

@@ -61,13 +61,6 @@ object TextOps {
       round(when(nTok > 0, stop.cast(DoubleType) / nTok).otherwise(0d), 4).as("stopword_ratio"))
   }
 
-  /** Single source of truth is the compiled kernel's set
-    * (graft.functions.VecFns.Stopwords) — exposed here for API users. */
-  val stopwords: Seq[String] = {
-    import scala.jdk.CollectionConverters._
-    graft.functions.VecFns.Stopwords.asScala.toSeq.sorted
-  }
-
   /** Composite quality score in [0,1]: length sweet-spot × low punct ×
     * stopword presence (heuristic in the spirit of public quality
     * filters; deterministic arithmetic). */
@@ -92,13 +85,6 @@ object TextOps {
   /** Language-ID heuristic: argmax of language-marker stopword hits
     * (n-gram/stopword heuristic; ties and no-hits → "und"). Source of
     * truth is the compiled kernel's sets (VecFns.MarkersXx). */
-  val langMarkers: Seq[(String, Seq[String])] = {
-    import scala.jdk.CollectionConverters._
-    import graft.functions.VecFns._
-    Seq("en" -> MarkersEn, "de" -> MarkersDe, "es" -> MarkersEs, "fr" -> MarkersFr)
-      .map { case (l, s) => l -> s.asScala.toSeq.sorted }
-  }
-
   def langId(c: Column): Column = {
     val st = stats(c)
     val en = st.getField("en_hits"); val de = st.getField("de_hits")
@@ -124,8 +110,6 @@ object TextOps {
       .where(col("cnt") > 1)
 
   // ---- MinHash + LSH ----------------------------------------------------
-
-  private val MersennePrime = 2147483647L // 2^31 - 1
 
   /** Word n-gram shingles of the normalized text (distinct). Compiled
     * kernel (graft.functions.NgramShingles): normalize + tokenize + shingle
@@ -169,7 +153,7 @@ object TextOps {
                          seed: Long, what: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     if (cap <= 0) {
-      System.err.println(s"[graft] $what: per-bucket candidate cap is OFF — an over-full " +
+      System.err.println(s"[graft] $what: per-bucket candidate cap is OFF - an over-full " +
         "bucket makes the self-join quadratic in its size; set a finite maxBucketSize " +
         "for corpus-scale runs")
       banded
@@ -185,7 +169,7 @@ object TextOps {
         // (VERDICT_r05 "What's wrong" #3).
         banded
       } else {
-        System.err.println(s"[graft] $what: per-bucket cap $cap binding — dropped " +
+        System.err.println(s"[graft] $what: per-bucket cap $cap binding - dropped " +
           s"${over.getLong(0)} row-bucket assignments across ${over.getLong(1)} over-full " +
           "buckets from candidate generation (recall becomes approximate for rows " +
           "sharing only over-full buckets)")
@@ -365,7 +349,7 @@ object TextOps {
         // inverted-index join is quadratic in the hottest shingle's doc
         // frequency — one stop-phrase shared by d docs contributes d^2/2
         // candidate rows. Only exact oracle runs should ever opt out.
-        System.err.println("[graft] ngramJaccardPairs: maxDocFreq cap explicitly DISABLED — " +
+        System.err.println("[graft] ngramJaccardPairs: maxDocFreq cap explicitly DISABLED - " +
           "candidate generation is quadratic in the hottest shingle's doc frequency; " +
           "this is only safe for exact small-scale runs")
         inv0
