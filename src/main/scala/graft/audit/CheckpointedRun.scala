@@ -1,8 +1,12 @@
 package graft.audit
 
+import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import org.apache.hadoop.fs.{Path => HadoopPath}
 import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.ColumnBridge
+import graft.functions.UnitTally.unit_tally
 import graft.run.ValidationPlan
 
 /** Resumable, per-unit checkpointed validation runs (north rule:
@@ -10,14 +14,29 @@ import graft.run.ValidationPlan
   * committed atomically to an audit table").
   *
   * The unit of work is one input parquet file — a stable identity across
-  * runs (unlike `spark_partition_id`). Per unit we write: the violation
-  * rows (overwrite-idempotent directory) and a commit record (JSON,
-  * written to a temp file and atomically renamed). A re-run of the same
-  * (runId, table, plan) skips committed units, so a crash mid-run resumes
-  * where it stopped and never double-counts. This emulates an Iceberg
-  * audit-table commit protocol with filesystem primitives (the sandbox has
-  * no Iceberg catalog); the commit record carries lineage (input file,
-  * plan fingerprint, engine version) + metrics.
+  * runs (unlike `spark_partition_id`). A run validates all of its pending
+  * units as one batch, in one Spark job:
+  *  - one scan of the pending files, each row tagged with its unit from
+  *    `_metadata.file_path`;
+  *  - the battery evaluated once per row; per-unit rows, invalid rows and
+  *    violations observed on that same pass through one `unit_tally`
+  *    aggregate;
+  *  - the violation rows (keys plus `unit_id`) written, not partitioned,
+  *    to `violations/<runId>/<batchId>/`.
+  *
+  * The batch then commits in two steps. First one atomic rename publishes
+  * the batch manifest `commits/<runId>/_batches/<batchId>.jsonl`, one line
+  * per unit. Then each line is copied, again by atomic rename, to the
+  * unit's commit record `commits/<runId>/<unitId>.json`. A run starts by
+  * finishing that fan-out for every manifest and, once every commit record
+  * matched the plan, by deleting every batch directory that has no
+  * manifest, so a crash at any point resumes to exact counts: units
+  * already committed are skipped, the rest run again.
+  *
+  * This emulates an Iceberg audit-table commit protocol with filesystem
+  * primitives (no Iceberg catalog is assumed); the commit record
+  * carries lineage (input file, plan fingerprint, engine version) and
+  * metrics. `started_at` / `finished_at` are the batch's times.
   */
 object CheckpointedRun {
 
@@ -30,124 +49,196 @@ object CheckpointedRun {
     def resumedUnits: Int = units.count(_.skipped)
   }
 
+  private def digest(s: String): String =
+    java.security.MessageDigest.getInstance("SHA-256").digest(s.getBytes(UTF_8))
+      .take(16).map(b => f"$b%02x").mkString
+
   /** Stable, collision-resistant id for a unit: SHA-256 of the input file
     * path. A 32-bit String.hashCode would see birthday collisions well
     * below the north-rule's tens of thousands of parquet files — two units
     * sharing an id means one unit's commit silently skips the other. */
-  private def unitId(file: String): String = {
-    val d = java.security.MessageDigest.getInstance("SHA-256")
-      .digest(file.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    "u" + d.take(16).map(b => f"$b%02x").mkString
-  }
+  private def unitId(file: String): String = "u" + digest(file)
 
-  def planFingerprint(plan: ValidationPlan): String = {
-    val d = java.security.MessageDigest.getInstance("SHA-256").digest(
-      plan.checks.map(c => c.keyword + "\u0000" + c.schemaPath + "\u0000" + c.instancePath)
-        .mkString("|").getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    d.take(16).map(b => f"$b%02x").mkString
-  }
+  /** Hash of every check: its location and the full rendering of its
+    * predicate and message, so a plan that changes only a bound or an
+    * enum gets a new fingerprint. */
+  def planFingerprint(plan: ValidationPlan): String =
+    digest(plan.checks.map(c => Seq(c.keyword, c.schemaPath, c.instancePath,
+      ColumnBridge.render(c.predicate), ColumnBridge.render(c.message)).mkString("\u0000"))
+      .mkString("|"))
 
   /** List the table's parquet files (the work units). */
   def listUnits(tablePath: String): Seq[String] = {
     val dir = Paths.get(tablePath)
-    if (Files.isDirectory(dir)) {
+    if (Files.isDirectory(dir)) list(dir).filter(_.endsWith(".parquet")).map(dir.resolve(_).toString)
+    else Seq(tablePath)
+  }
+
+  /** Sorted file names in `dir`; none if it does not exist. */
+  private def list(dir: Path): Seq[String] =
+    if (!Files.isDirectory(dir)) Nil
+    else {
       val s = Files.list(dir)
-      try s.iterator().asScala
-        .map(_.toString).filter(_.endsWith(".parquet")).toSeq.sorted
-      finally s.close()
-    } else Seq(tablePath)
-  }
-  private implicit class IterOps[A](it: java.util.Iterator[A]) {
-    def asScala: Iterator[A] = new Iterator[A] {
-      def hasNext = it.hasNext; def next() = it.next()
+      try {
+        val names = Seq.newBuilder[String]
+        s.forEach(p => names += p.getFileName.toString)
+        names.result().sorted
+      } finally s.close()
     }
-  }
 
-  private def commitPath(auditDir: String, runId: String, unit: String): Path =
-    Paths.get(auditDir, "commits", runId, s"${unitId(unit)}.json")
-
-  private def isCommitted(auditDir: String, runId: String, unit: String): Boolean =
-    Files.exists(commitPath(auditDir, runId, unit))
+  /** Test seam: called with "manifest-temp" once the manifest's temp file
+    * is written, "manifest" once it is renamed, and "fan-out" before each
+    * unit's commit record; a spec throws from it to crash the run there. */
+  @volatile private[graft] var onCommitStep: String => Unit = _ => ()
 
   /** Validate one table with per-unit commit/resume. `failAfterUnits` is a
-    * test hook simulating a crash. */
+    * test hook simulating a crash: at most that many pending units are
+    * validated and committed, then the run throws. */
   def run(spark: SparkSession, tablePath: String, plan: ValidationPlan,
           auditDir: String, runId: String, keyCols: Seq[String],
           failAfterUnits: Int = Int.MaxValue): RunSummary = {
-    Files.createDirectories(Paths.get(auditDir, "commits", runId))
+    val commits = Paths.get(auditDir, "commits", runId)
+    Files.createDirectories(commits.resolve("_batches"))
+    val listed = list(commits).toSet
+    val fanned = finishFanOut(commits, listed)
+    val committed = listed ++ fanned.keySet
     val fp = planFingerprint(plan)
-    var processed = 0
-    val results = listUnits(tablePath).map { unit =>
-      if (isCommitted(auditDir, runId, unit)) {
-        val p = commitPath(auditDir, runId, unit)
-        val rec = ujsonRead(p)
-        // a commit is only trusted if it was made by the SAME plan over the
-        // SAME unit — resuming a runId with a different plan/table must fail
-        // loudly, not silently reuse stale commits
-        val recFp = strField(p, "plan_fingerprint")
-        val recUnit = strField(p, "unit")
-        if (recFp != fp)
-          throw new IllegalStateException(
-            s"resume mismatch for $unit: commit has plan_fingerprint=$recFp, current plan is $fp " +
-              s"(use a new runId to re-validate with a different plan)")
-        if (recUnit != unit.replace("\\", "/"))
-          throw new IllegalStateException(
-            s"resume mismatch: commit ${p.getFileName} records unit '$recUnit' but was matched to '$unit'")
-        UnitResult(unit, rec("rows"), rec("invalid_rows"), rec("violations"), skipped = true)
-      } else {
-        if (processed >= failAfterUnits)
-          throw new RuntimeException(s"injected failure before unit $unit")
-        processed += 1
-        val started = System.currentTimeMillis()
-        val df = spark.read.parquet(unit)
-        // violations for this unit: idempotent overwrite of the unit's dir.
-        // The metrics are observed on the staged (keys, violations) frame
-        // of that same write, so the battery runs once per row and the
-        // unit costs one query. `sum` over a zero-row unit is NULL.
-        val vioDir = s"$auditDir/violations/$runId/${unitId(unit)}"
-        val metrics = Observation()
-        val nVio = size(col("violations"))
-        val staged = plan.stagedViolations(df, keyCols).observe(metrics,
-          count(lit(1)).as("rows"),
-          coalesce(sum(when(nVio > 0, 1L).otherwise(0L)), lit(0L)).as("invalid"),
-          coalesce(sum(nVio), lit(0L)).as("violations"))
-        plan.explodeStaged(staged, keyCols).write.mode("overwrite").parquet(vioDir)
-        val m = metrics.get
-        val rows = m("rows").asInstanceOf[Long]
-        val inv = m("invalid").asInstanceOf[Long]
-        val vio = m("violations").asInstanceOf[Long]
-        // atomic commit: temp file + rename
-        // single line: the audit log is read as JSON-lines
-        val rec =
-          s"""{"run_id":"$runId","unit":"${unit.replace("\\", "/")}","unit_id":"${unitId(unit)}","plan_fingerprint":"$fp","engine":"graft-0.1.0","rows":$rows,"invalid_rows":$inv,"violations":$vio,"started_at":$started,"finished_at":${System.currentTimeMillis()}}"""
-        val tmp = Files.createTempFile(Paths.get(auditDir), "commit", ".tmp")
-        Files.writeString(tmp, rec)
-        Files.move(tmp, commitPath(auditDir, runId, unit),
-          StandardCopyOption.ATOMIC_MOVE)
-        UnitResult(unit, rows, inv, vio, skipped = false)
-      }
-    }
-    RunSummary(runId, results)
+    val units = listUnits(tablePath)
+    val resumed = units.flatMap { unit =>
+      val name = s"${unitId(unit)}.json"
+      if (!committed(name)) None
+      else Some(unit -> resume(unit, name,
+        fanned.getOrElse(name, Files.readString(commits.resolve(name))), fp))
+    }.toMap
+    // only once every commit matched this plan: a mismatch leaves the
+    // directory as it was
+    dropUncommitted(commits, listed, Paths.get(auditDir, "violations", runId))
+    val pending = units.filterNot(resumed.contains)
+    val batch = pending.take(failAfterUnits)
+    val done = if (batch.isEmpty) Map.empty[String, UnitResult]
+      else runBatch(spark, plan, fp, auditDir, runId, keyCols, batch)
+    if (batch.size < pending.size)
+      throw new RuntimeException(s"injected failure before unit ${pending(batch.size)}")
+    RunSummary(runId, units.map(u => resumed.getOrElse(u, done(u))))
   }
 
-  /** Read the audit log of a run as a DataFrame (the audit-table view). */
+  /** Finish the commit of every batch whose manifest was published: write
+    * the unit records it lacks, returned by file name. */
+  private def finishFanOut(commits: Path, committed: Set[String]): Map[String, String] = {
+    val batches = commits.resolve("_batches")
+    val fanned = list(batches).filter(_.endsWith(".jsonl")).flatMap { m =>
+      Files.readString(batches.resolve(m)).linesIterator.map { rec =>
+        s"${fields(rec)("unit_id")}.json" -> rec
+      }.filterNot(r => committed(r._1))
+    }
+    fanned.foreach { case (name, rec) => publish(commits.resolve(name), rec) }
+    fanned.toMap
+  }
+
+  /** Delete what batches that never committed left: violation directories
+    * without a manifest and temp files. Their units run again. */
+  private def dropUncommitted(commits: Path, listed: Set[String], violations: Path): Unit = {
+    val batches = commits.resolve("_batches")
+    val (manifests, temps) = list(batches).partition(_.endsWith(".jsonl"))
+    temps.foreach(t => Files.delete(batches.resolve(t)))
+    listed.filter(_.endsWith(".tmp")).foreach(t => Files.deleteIfExists(commits.resolve(t)))
+    val published = manifests.toSet
+    list(violations).filterNot(b => published(s"$b.jsonl"))
+      .foreach(b => deleteTree(violations.resolve(b)))
+  }
+
+  /** A committed unit's metrics. A commit is only trusted if it was made by
+    * the SAME plan over the SAME unit: resuming a runId with a different
+    * plan or table must fail loudly, not silently reuse stale commits. */
+  private def resume(unit: String, name: String, rec: String, fp: String): UnitResult = {
+    val f = fields(rec)
+    if (f("plan_fingerprint") != fp)
+      throw new IllegalStateException(
+        s"resume mismatch for $unit: commit has plan_fingerprint=${f("plan_fingerprint")}, " +
+          s"current plan is $fp (use a new runId to re-validate with a different plan)")
+    if (f("unit") != unit.replace("\\", "/"))
+      throw new IllegalStateException(
+        s"resume mismatch: commit $name records unit '${f("unit")}' but was matched to '$unit'")
+    UnitResult(unit, f("rows").toLong, f("invalid_rows").toLong, f("violations").toLong,
+      skipped = true)
+  }
+
+  /** Validate `batch` in one Spark job, then commit it: manifest, then
+    * one record per unit. */
+  private def runBatch(spark: SparkSession, plan: ValidationPlan, fp: String, auditDir: String,
+                       runId: String, keyCols: Seq[String],
+                       batch: Seq[String]): Map[String, UnitResult] = {
+    val started = System.currentTimeMillis()
+    val batchId = s"b$started-${java.util.UUID.randomUUID().toString.take(8)}"
+    // rows are tagged with their unit's index by a driver-built map from
+    // Spark's file path; a broadcast join with a local table of the units
+    // would cost a job of its own to collect that table
+    val conf = spark.sparkContext.hadoopConfiguration
+    val index = batch.zipWithIndex.map { case (u, i) => sparkPath(u, conf) -> i }.toMap
+    val unitOf = udf((path: String) => index(path))
+    val scan = spark.read.parquet(batch: _*)
+      .withColumn("_graft_unit", unitOf(col("_metadata.file_path")))
+      .withColumn("unit_id", element_at(typedlit(batch.map(unitId)), col("_graft_unit") + 1))
+    // the metrics are observed on the staged (keys, violations) frame of
+    // the write itself, so the battery runs once per row
+    val tally = Observation()
+    val staged = plan.stagedViolations(scan, keyCols ++ Seq("unit_id", "_graft_unit"))
+      .observe(tally, unit_tally(col("_graft_unit"), size(col("violations")), batch.size).as("t"))
+    plan.explodeStaged(staged, keyCols :+ "unit_id")
+      .write.parquet(Paths.get(auditDir, "violations", runId, batchId).toString)
+    val t = tally.get("t").asInstanceOf[scala.collection.Seq[Long]]
+    val finished = System.currentTimeMillis()
+    val results = batch.zipWithIndex.map { case (u, i) =>
+      UnitResult(u, t(3 * i), t(3 * i + 1), t(3 * i + 2), skipped = false)
+    }
+    // single-line records: the audit log is read as JSON-lines
+    val records = results.map(r =>
+      s"""{"run_id":"$runId","unit":"${r.unit.replace("\\", "/")}","unit_id":"${unitId(r.unit)}","plan_fingerprint":"$fp","engine":"graft-0.1.0","rows":${r.rows},"invalid_rows":${r.invalidRows},"violations":${r.violations},"started_at":$started,"finished_at":$finished}""")
+    val commits = Paths.get(auditDir, "commits", runId)
+    publish(commits.resolve("_batches").resolve(s"$batchId.jsonl"), records.mkString("\n"),
+      onCommitStep("manifest-temp"))
+    onCommitStep("manifest")
+    results.zip(records).foreach { case (r, rec) =>
+      onCommitStep("fan-out")
+      publish(commits.resolve(s"${unitId(r.unit)}.json"), rec)
+    }
+    results.map(r => r.unit -> r).toMap
+  }
+
+  /** A unit's path as Spark renders `_metadata.file_path`: qualified, then
+    * URI-encoded (`/a b/t%1/f` reads `file:/a%20b/t%251/f`). */
+  private def sparkPath(unit: String, conf: org.apache.hadoop.conf.Configuration): String = {
+    val p = new HadoopPath(unit)
+    new HadoopPath(p.getFileSystem(conf).makeQualified(p).toString).toUri.toString
+  }
+
+  /** Atomic publish: `text` written to `<target>.tmp`, then renamed over. */
+  private def publish(target: Path, text: String, beforeRename: => Unit = ()): Unit = {
+    val tmp = target.resolveSibling(s"${target.getFileName}.tmp")
+    Files.writeString(tmp, text)
+    beforeRename
+    Files.move(tmp, target, StandardCopyOption.ATOMIC_MOVE)
+  }
+
+  private def deleteTree(root: Path): Unit = {
+    val s = Files.walk(root)
+    try s.sorted(java.util.Comparator.reverseOrder[Path]()).forEach(p => Files.delete(p))
+    finally s.close()
+  }
+
+  /** Read the audit log of a run as a DataFrame (the audit-table view).
+    * The directory plus a file filter, not a `*.json` glob: Spark logs a
+    * stack trace for every glob path it reads. */
   def auditLog(spark: SparkSession, auditDir: String, runId: String): DataFrame =
-    spark.read.json(s"$auditDir/commits/$runId/*.json")
+    spark.read.option("pathGlobFilter", "*.json").json(s"$auditDir/commits/$runId")
 
-  private def ujsonRead(p: Path): Map[String, Long] = {
-    // minimal extraction of the numeric fields we need
-    val text = Files.readString(p)
-    def num(field: String): Long = {
-      val m = java.util.regex.Pattern.compile("\"" + field + "\":(\\d+)").matcher(text)
-      if (m.find()) m.group(1).toLong else 0L
-    }
-    Map("rows" -> num("rows"), "invalid_rows" -> num("invalid_rows"),
-      "violations" -> num("violations"))
-  }
+  private val Field = java.util.regex.Pattern.compile("\"(\\w+)\":(?:\"([^\"]*)\"|(-?\\d+))")
 
-  private def strField(p: Path, field: String): String = {
-    val text = Files.readString(p)
-    val m = java.util.regex.Pattern.compile("\"" + field + "\":\"([^\"]*)\"").matcher(text)
-    if (m.find()) m.group(1) else ""
+  /** The string and integer fields of a flat one-line commit record. */
+  private def fields(rec: String): Map[String, String] = {
+    val m = Field.matcher(rec)
+    val out = Map.newBuilder[String, String]
+    while (m.find()) out += m.group(1) -> Option(m.group(2)).getOrElse(m.group(3))
+    out.result()
   }
 }

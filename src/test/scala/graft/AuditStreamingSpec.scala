@@ -1,10 +1,9 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.grafttest.ListenerDrain
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
+import graft.TestSpark.jobsDuring
 import graft.audit.CheckpointedRun
 import graft.run.Validation
 import graft.streaming.StreamingValidation
@@ -12,19 +11,16 @@ import graft.streaming.StreamingValidation
 class AuditStreamingSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
 
-  /** Spark jobs started while `body` runs, added to `jobs`. */
-  private val jobs = new java.util.concurrent.atomic.AtomicInteger
-  private def jobsDuring[A](body: => A): A = {
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
-    }
-    ListenerDrain(spark.sparkContext)
-    spark.sparkContext.addSparkListener(listener)
-    try body
-    finally {
-      ListenerDrain(spark.sparkContext)
-      spark.sparkContext.removeSparkListener(listener)
-    }
+  private def tempDir(prefix: String): String =
+    java.nio.file.Files.createTempDirectory(prefix).toString
+
+  private val orders = "/root/testdata/sf0.001/orders.parquet"
+
+  /** The sf0.001 orders split into `files` parquet files (units). */
+  private def ordersTable(files: Int, dir: String = tempDir("graft_table")): String = {
+    spark.read.parquet(orders)
+      .repartition(files).write.mode("overwrite").parquet(dir)
+    dir
   }
 
   val ordersSpec = """{
@@ -33,11 +29,8 @@ class AuditStreamingSpec extends AnyFunSuite {
   }"""
 
   test("checkpointed run: crash mid-run, resume completes without double counting") {
-    import spark.implicits._
     // a table with several parquet files (units)
-    val tableDir = java.nio.file.Files.createTempDirectory("graft_table").toString
-    spark.read.parquet("/root/testdata/sf0.001/orders.parquet")
-      .repartition(4).write.mode("overwrite").parquet(tableDir)
+    val tableDir = ordersTable(4)
     val df = spark.read.parquet(tableDir)
     val plan = Validation.compile(ordersSpec, df.schema)
     val auditDir = java.nio.file.Files.createTempDirectory("graft_audit").toString
@@ -48,20 +41,17 @@ class AuditStreamingSpec extends AnyFunSuite {
 
     // crash after 2 units
     val crash = intercept[RuntimeException] {
-      jobsDuring(CheckpointedRun.run(spark, tableDir, plan, auditDir, "run1",
-        Seq("o_orderkey"), failAfterUnits = 2))
+      CheckpointedRun.run(spark, tableDir, plan, auditDir, "run1",
+        Seq("o_orderkey"), failAfterUnits = 2)
     }
     assert(crash.getMessage.contains("injected failure"))
     val committed = CheckpointedRun.auditLog(spark, auditDir, "run1")
     assert(committed.count() == 2)
 
     // resume: completes, skips the 2 committed units
-    val summary = jobsDuring(CheckpointedRun.run(spark, tableDir, plan, auditDir, "run1",
-      Seq("o_orderkey")))
+    val summary = CheckpointedRun.run(spark, tableDir, plan, auditDir, "run1",
+      Seq("o_orderkey"))
     assert(summary.resumedUnits == 2)
-    // one query per processed unit (the violations write, with the unit's
-    // metrics observed on it): at most 2 jobs each, over 4 processed units
-    assert(jobs.get() <= 2 * 4, s"${jobs.get()} jobs for 4 processed units")
     assert(summary.rows == expectRows)
     assert(summary.invalidRows == expectInvalid)
 
@@ -71,7 +61,7 @@ class AuditStreamingSpec extends AnyFunSuite {
     assert(log.agg(sum("invalid_rows")).collect()(0).getLong(0) == expectInvalid)
     assert(log.select("plan_fingerprint").distinct().count() == 1)
 
-    // violations materialized per unit, total matches a direct run
+    // violations materialized per batch, total matches a direct run
     val vio = spark.read.parquet(s"$auditDir/violations/run1/*")
     assert(vio.count() == plan.violations(df, Seq("o_orderkey")).count())
     assert(log.agg(sum("violations")).collect()(0).getLong(0) == vio.count())
@@ -108,6 +98,81 @@ class AuditStreamingSpec extends AnyFunSuite {
     assert((empty.rows, empty.invalidRows, empty.violations) == ((0L, 0L, 0L)))
     assert(summary.rows == orders.count())
     assert(summary.invalidRows == orders.where(!plan.isValidCol).count())
+  }
+
+  test("checkpointed run: jobs per batch are a constant, not a number per unit") {
+    def jobsFor(files: Int): Int = {
+      val tableDir = ordersTable(files)
+      val plan = Validation.compile(ordersSpec, spark.read.parquet(tableDir).schema)
+      val auditDir = tempDir("graft_audit")
+      val (summary, jobs) = jobsDuring(CheckpointedRun.run(spark, tableDir, plan, auditDir,
+        "r", Seq("o_orderkey")))
+      assert(summary.units.size == files && summary.resumedUnits == 0)
+      val (again, none) = jobsDuring(CheckpointedRun.run(spark, tableDir, plan, auditDir,
+        "r", Seq("o_orderkey")))
+      assert(again.resumedUnits == files && none == 0, s"a completed run resumed with $none jobs")
+      jobs
+    }
+    val (four, sixteen) = (jobsFor(4), jobsFor(16))
+    assert(four == sixteen, s"$four jobs for 4 units, $sixteen for 16")
+    assert(four <= 2, s"$four jobs for one batch")
+  }
+
+  test("plan fingerprint: a changed bound is a new plan; two compiles agree") {
+    val schema = spark.read.parquet(orders).schema
+    val plan = Validation.compile(ordersSpec, schema)
+    val tighter = Validation.compile(ordersSpec.replace("200000", "100000"), schema)
+    assert(CheckpointedRun.planFingerprint(plan) != CheckpointedRun.planFingerprint(tighter))
+    // two compiles, the second in a fresh session, fingerprint alike; the
+    // map spec compiles to lambdas, whose variable names are fresh per compile
+    val mapSchema = org.apache.spark.sql.types.StructType.fromDDL("m map<string,int>, a array<double>")
+    val mapSpec = """{"properties": {
+      "m": {"patternProperties": {"^x": {"maximum": 3}}, "additionalProperties": {"minimum": 0},
+            "propertyNames": {"maxLength": 4}},
+      "a": {"items": {"minimum": -1}, "contains": {"minimum": 0.5}}}}"""
+    def twice(spec: String, s: org.apache.spark.sql.types.StructType) = {
+      val first = CheckpointedRun.planFingerprint(Validation.compile(spec, s))
+      val fresh = spark.newSession()
+      org.apache.spark.sql.SparkSession.setActiveSession(fresh)
+      try (first, CheckpointedRun.planFingerprint(Validation.compile(spec, s)))
+      finally org.apache.spark.sql.SparkSession.setActiveSession(spark)
+    }
+    Seq(ordersSpec -> schema, mapSpec -> mapSchema).foreach { case (spec, s) =>
+      val (a, b) = twice(spec, s)
+      assert(a == b, s"fingerprints $a / $b for one spec")
+    }
+    assert(twice(mapSpec, mapSchema)._1 !=
+      twice(mapSpec.replace("\"minimum\": -1", "\"minimum\": -2"), mapSchema)._1,
+      "an items bound inside a custom element predicate must change the fingerprint")
+
+    // resuming a run id with the tightened plan fails loudly instead of
+    // reusing the commits the old bound made
+    val tableDir = ordersTable(2)
+    val auditDir = tempDir("graft_audit")
+    CheckpointedRun.run(spark, tableDir, plan, auditDir, "r", Seq("o_orderkey"))
+    val violations = spark.read.parquet(s"$auditDir/violations/r/*").count()
+    val stale = intercept[IllegalStateException] {
+      CheckpointedRun.run(spark, tableDir, tighter, auditDir, "r", Seq("o_orderkey"))
+    }
+    assert(stale.getMessage.contains("plan_fingerprint"))
+    assert(spark.read.parquet(s"$auditDir/violations/r/*").count() == violations)
+  }
+
+  test("checkpointed run: units under a path with a space, % and + commit their own counts") {
+    val root = tempDir("graft_paths")
+    val tableDir = ordersTable(3, s"$root/sp ace/t%1+x")
+    val plan = Validation.compile(ordersSpec, spark.read.parquet(tableDir).schema)
+    val summary = CheckpointedRun.run(spark, tableDir, plan, tempDir("graft_audit"), "r",
+      Seq("o_orderkey"))
+    assert(summary.units.size == 3)
+    summary.units.foreach { u =>
+      val file = spark.read.parquet(u.unit)
+      val expect = (file.count(), file.where(!plan.isValidCol).count(),
+        plan.violations(file, Seq("o_orderkey")).count())
+      assert(expect._1 > 0)
+      assert((u.rows, u.invalidRows, u.violations) == expect, s"unit ${u.unit}")
+    }
+    assert(summary.invalidRows > 0)
   }
 
   // readStream needs a directory source
