@@ -14,24 +14,24 @@ import graft.run.ValidationPlan
   * committed atomically to an audit table").
   *
   * The unit of work is one input parquet file — a stable identity across
-  * runs (unlike `spark_partition_id`). A run validates all of its pending
-  * units as one batch, in one Spark job:
-  *  - one scan of the pending files, each row tagged with its unit from
+  * runs (unlike `spark_partition_id`). A run validates its pending units
+  * in batches of at most `BatchUnits`, one after another, each in one
+  * Spark job:
+  *  - one scan of the batch's files, each row tagged with its unit from
   *    `_metadata.file_path`;
   *  - the battery evaluated once per row; per-unit rows, invalid rows and
   *    violations observed on that same pass through one `unit_tally`
   *    aggregate;
-  *  - the violation rows (keys plus `unit_id`) written, not partitioned,
-  *    to `violations/<runId>/<batchId>/`.
+  *  - the violation rows (keys plus `_graft_unit_id`) written, not
+  *    partitioned, to `violations/<runId>/<batchId>/`.
   *
-  * The batch then commits in two steps. First one atomic rename publishes
-  * the batch manifest `commits/<runId>/_batches/<batchId>.jsonl`, one line
-  * per unit. Then each line is copied, again by atomic rename, to the
-  * unit's commit record `commits/<runId>/<unitId>.json`. A run starts by
-  * finishing that fan-out for every manifest and, once every commit record
-  * matched the plan, by deleting every batch directory that has no
-  * manifest, so a crash at any point resumes to exact counts: units
-  * already committed are skipped, the rest run again.
+  * A batch commits by one atomic rename of its manifest
+  * `commits/<runId>/<batchId>.jsonl`, one commit record per unit; the
+  * manifests are the audit log. A run starts by reading every manifest
+  * and, once every record matched the plan, by deleting every batch
+  * directory that has no manifest, so a crash at any point resumes to
+  * exact counts: units already committed are skipped, the rest run again,
+  * and a crash loses at most one batch.
   *
   * This emulates an Iceberg audit-table commit protocol with filesystem
   * primitives (no Iceberg catalog is assumed); the commit record
@@ -48,6 +48,15 @@ object CheckpointedRun {
     def violations: Long = units.map(_.violations).sum
     def resumedUnits: Int = units.count(_.skipped)
   }
+
+  /** Units per batch: bounds the work a crash loses and the per-unit
+    * buffer of `unit_tally`. */
+  private[graft] val BatchUnits = 256
+
+  /** The columns a batch adds to the scan: the row's unit index and unit
+    * id. A table or key list that uses these names is rejected. */
+  private val UnitCol = "_graft_unit"
+  private val UnitIdCol = "_graft_unit_id"
 
   private def digest(s: String): String =
     java.security.MessageDigest.getInstance("SHA-256").digest(s.getBytes(UTF_8))
@@ -86,9 +95,9 @@ object CheckpointedRun {
       } finally s.close()
     }
 
-  /** Test seam: called with "manifest-temp" once the manifest's temp file
-    * is written, "manifest" once it is renamed, and "fan-out" before each
-    * unit's commit record; a spec throws from it to crash the run there. */
+  /** Test seam: called with "manifest-temp" once a manifest's temp file is
+    * written and "manifest" once it is renamed; a spec throws from it to
+    * crash the run there. */
   @volatile private[graft] var onCommitStep: String => Unit = _ => ()
 
   /** Validate one table with per-unit commit/resume. `failAfterUnits` is a
@@ -98,93 +107,79 @@ object CheckpointedRun {
           auditDir: String, runId: String, keyCols: Seq[String],
           failAfterUnits: Int = Int.MaxValue): RunSummary = {
     val commits = Paths.get(auditDir, "commits", runId)
-    Files.createDirectories(commits.resolve("_batches"))
-    val listed = list(commits).toSet
-    val fanned = finishFanOut(commits, listed)
-    val committed = listed ++ fanned.keySet
+    Files.createDirectories(commits)
+    val listed = list(commits)
+    if (listed.exists(_.endsWith(".json")))
+      throw new IllegalStateException(s"run $runId holds per-unit commit records of an " +
+        "earlier layout (use a new runId to re-validate)")
+    val manifests = listed.filter(_.endsWith(".jsonl"))
+    val records = manifests.iterator
+      .flatMap(m => Files.readString(commits.resolve(m)).linesIterator).map(fields)
+      .map(f => f("unit_id") -> f).toMap
     val fp = planFingerprint(plan)
     val units = listUnits(tablePath)
-    val resumed = units.flatMap { unit =>
-      val name = s"${unitId(unit)}.json"
-      if (!committed(name)) None
-      else Some(unit -> resume(unit, name,
-        fanned.getOrElse(name, Files.readString(commits.resolve(name))), fp))
-    }.toMap
+    val resumed = units.flatMap(u => records.get(unitId(u)).map(f => u -> resume(u, f, fp))).toMap
     // only once every commit matched this plan: a mismatch leaves the
     // directory as it was
-    dropUncommitted(commits, listed, Paths.get(auditDir, "violations", runId))
+    dropUncommitted(commits, listed, manifests.toSet, Paths.get(auditDir, "violations", runId))
     val pending = units.filterNot(resumed.contains)
-    val batch = pending.take(failAfterUnits)
-    val done = if (batch.isEmpty) Map.empty[String, UnitResult]
-      else runBatch(spark, plan, fp, auditDir, runId, keyCols, batch)
-    if (batch.size < pending.size)
-      throw new RuntimeException(s"injected failure before unit ${pending(batch.size)}")
+    val todo = pending.take(failAfterUnits)
+    val done = todo.grouped(BatchUnits)
+      .flatMap(runBatch(spark, plan, fp, auditDir, runId, keyCols, _)).toMap
+    if (todo.size < pending.size)
+      throw new RuntimeException(s"injected failure before unit ${pending(todo.size)}")
     RunSummary(runId, units.map(u => resumed.getOrElse(u, done(u))))
-  }
-
-  /** Finish the commit of every batch whose manifest was published: write
-    * the unit records it lacks, returned by file name. */
-  private def finishFanOut(commits: Path, committed: Set[String]): Map[String, String] = {
-    val batches = commits.resolve("_batches")
-    val fanned = list(batches).filter(_.endsWith(".jsonl")).flatMap { m =>
-      Files.readString(batches.resolve(m)).linesIterator.map { rec =>
-        s"${fields(rec)("unit_id")}.json" -> rec
-      }.filterNot(r => committed(r._1))
-    }
-    fanned.foreach { case (name, rec) => publish(commits.resolve(name), rec) }
-    fanned.toMap
   }
 
   /** Delete what batches that never committed left: violation directories
     * without a manifest and temp files. Their units run again. */
-  private def dropUncommitted(commits: Path, listed: Set[String], violations: Path): Unit = {
-    val batches = commits.resolve("_batches")
-    val (manifests, temps) = list(batches).partition(_.endsWith(".jsonl"))
-    temps.foreach(t => Files.delete(batches.resolve(t)))
-    listed.filter(_.endsWith(".tmp")).foreach(t => Files.deleteIfExists(commits.resolve(t)))
-    val published = manifests.toSet
-    list(violations).filterNot(b => published(s"$b.jsonl"))
+  private def dropUncommitted(commits: Path, listed: Seq[String], manifests: Set[String],
+                              violations: Path): Unit = {
+    listed.filter(_.endsWith(".tmp")).foreach(t => Files.delete(commits.resolve(t)))
+    list(violations).filterNot(b => manifests(s"$b.jsonl"))
       .foreach(b => deleteTree(violations.resolve(b)))
   }
 
   /** A committed unit's metrics. A commit is only trusted if it was made by
     * the SAME plan over the SAME unit: resuming a runId with a different
     * plan or table must fail loudly, not silently reuse stale commits. */
-  private def resume(unit: String, name: String, rec: String, fp: String): UnitResult = {
-    val f = fields(rec)
+  private def resume(unit: String, f: Map[String, String], fp: String): UnitResult = {
     if (f("plan_fingerprint") != fp)
       throw new IllegalStateException(
         s"resume mismatch for $unit: commit has plan_fingerprint=${f("plan_fingerprint")}, " +
           s"current plan is $fp (use a new runId to re-validate with a different plan)")
     if (f("unit") != unit.replace("\\", "/"))
       throw new IllegalStateException(
-        s"resume mismatch: commit $name records unit '${f("unit")}' but was matched to '$unit'")
+        s"resume mismatch: commit ${f("unit_id")} records unit '${f("unit")}' but was matched to '$unit'")
     UnitResult(unit, f("rows").toLong, f("invalid_rows").toLong, f("violations").toLong,
       skipped = true)
   }
 
-  /** Validate `batch` in one Spark job, then commit it: manifest, then
-    * one record per unit. */
+  /** Validate `batch` in one Spark job, then commit it by its manifest. */
   private def runBatch(spark: SparkSession, plan: ValidationPlan, fp: String, auditDir: String,
                        runId: String, keyCols: Seq[String],
                        batch: Seq[String]): Map[String, UnitResult] = {
     val started = System.currentTimeMillis()
     val batchId = s"b$started-${java.util.UUID.randomUUID().toString.take(8)}"
+    val table = spark.read.parquet(batch: _*)
+    val clash = (table.columns ++ keyCols).filter(c =>
+      Seq(UnitCol, UnitIdCol).exists(_.equalsIgnoreCase(c)))
+    require(clash.isEmpty, s"column names reserved by the audited run: ${clash.distinct.mkString(", ")}")
     // rows are tagged with their unit's index by a driver-built map from
     // Spark's file path; a broadcast join with a local table of the units
     // would cost a job of its own to collect that table
     val conf = spark.sparkContext.hadoopConfiguration
     val index = batch.zipWithIndex.map { case (u, i) => sparkPath(u, conf) -> i }.toMap
     val unitOf = udf((path: String) => index(path))
-    val scan = spark.read.parquet(batch: _*)
-      .withColumn("_graft_unit", unitOf(col("_metadata.file_path")))
-      .withColumn("unit_id", element_at(typedlit(batch.map(unitId)), col("_graft_unit") + 1))
+    val scan = table
+      .withColumn(UnitCol, unitOf(col("_metadata.file_path")))
+      .withColumn(UnitIdCol, element_at(typedlit(batch.map(unitId)), col(UnitCol) + 1))
     // the metrics are observed on the staged (keys, violations) frame of
     // the write itself, so the battery runs once per row
     val tally = Observation()
-    val staged = plan.stagedViolations(scan, keyCols ++ Seq("unit_id", "_graft_unit"))
-      .observe(tally, unit_tally(col("_graft_unit"), size(col("violations")), batch.size).as("t"))
-    plan.explodeStaged(staged, keyCols :+ "unit_id")
+    val staged = plan.stagedViolations(scan, keyCols ++ Seq(UnitIdCol, UnitCol))
+      .observe(tally, unit_tally(col(UnitCol), size(col("violations")), batch.size).as("t"))
+    plan.explodeStaged(staged, keyCols :+ UnitIdCol)
       .write.parquet(Paths.get(auditDir, "violations", runId, batchId).toString)
     val t = tally.get("t").asInstanceOf[scala.collection.Seq[Long]]
     val finished = System.currentTimeMillis()
@@ -194,14 +189,9 @@ object CheckpointedRun {
     // single-line records: the audit log is read as JSON-lines
     val records = results.map(r =>
       s"""{"run_id":"$runId","unit":"${r.unit.replace("\\", "/")}","unit_id":"${unitId(r.unit)}","plan_fingerprint":"$fp","engine":"graft-0.1.0","rows":${r.rows},"invalid_rows":${r.invalidRows},"violations":${r.violations},"started_at":$started,"finished_at":$finished}""")
-    val commits = Paths.get(auditDir, "commits", runId)
-    publish(commits.resolve("_batches").resolve(s"$batchId.jsonl"), records.mkString("\n"),
+    publish(Paths.get(auditDir, "commits", runId, s"$batchId.jsonl"), records.mkString("\n"),
       onCommitStep("manifest-temp"))
     onCommitStep("manifest")
-    results.zip(records).foreach { case (r, rec) =>
-      onCommitStep("fan-out")
-      publish(commits.resolve(s"${unitId(r.unit)}.json"), rec)
-    }
     results.map(r => r.unit -> r).toMap
   }
 
@@ -226,11 +216,12 @@ object CheckpointedRun {
     finally s.close()
   }
 
-  /** Read the audit log of a run as a DataFrame (the audit-table view).
-    * The directory plus a file filter, not a `*.json` glob: Spark logs a
-    * stack trace for every glob path it reads. */
+  /** Read the audit log of a run, the lines of its batch manifests, as a
+    * DataFrame (the audit-table view). The directory plus a file filter,
+    * not a `*.jsonl` glob: Spark logs a stack trace for every glob path it
+    * reads. */
   def auditLog(spark: SparkSession, auditDir: String, runId: String): DataFrame =
-    spark.read.option("pathGlobFilter", "*.json").json(s"$auditDir/commits/$runId")
+    spark.read.option("pathGlobFilter", "*.jsonl").json(s"$auditDir/commits/$runId")
 
   private val Field = java.util.regex.Pattern.compile("\"(\\w+)\":(?:\"([^\"]*)\"|(-?\\d+))")
 

@@ -18,8 +18,8 @@ import org.apache.spark.sql.graftshim.ColumnBridge
   * An `Observation` cannot group, and one `sum(when(unit = i, …))` per
   * unit and metric grows the plan with the batch size; this aggregate keeps
   * the plan one expression whatever the batch holds. The state is a dense
-  * buffer; serialization keeps only the units a partition saw, so a task
-  * over one file ships one unit's counts. */
+  * buffer, so `units` is kept small (an audited batch holds at most
+  * `CheckpointedRun.BatchUnits`). */
 case class UnitTally(unit: Expression, violations: Expression, units: Int,
                      mutableAggBufferOffset: Int = 0,
                      inputAggBufferOffset: Int = 0)
@@ -52,23 +52,15 @@ case class UnitTally(unit: Expression, violations: Expression, units: Int,
 
   override def eval(buffer: Array[Long]): Any = new GenericArrayData(buffer)
 
-  /** `(unit, rows, invalid, violations)` per unit with rows. */
   override def serialize(buffer: Array[Long]): Array[Byte] = {
-    val seen = (0 until units).filter(u => buffer(3 * u) != 0)
-    val bb = java.nio.ByteBuffer.allocate(seen.size * 28)
-    seen.foreach { u =>
-      bb.putInt(u).putLong(buffer(3 * u)).putLong(buffer(3 * u + 1)).putLong(buffer(3 * u + 2))
-    }
+    val bb = java.nio.ByteBuffer.allocate(8 * buffer.length)
+    bb.asLongBuffer().put(buffer)
     bb.array()
   }
 
   override def deserialize(bytes: Array[Byte]): Array[Long] = {
     val out = createAggregationBuffer()
-    val bb = java.nio.ByteBuffer.wrap(bytes)
-    while (bb.hasRemaining) {
-      val i = 3 * bb.getInt()
-      out(i) = bb.getLong(); out(i + 1) = bb.getLong(); out(i + 2) = bb.getLong()
-    }
+    java.nio.ByteBuffer.wrap(bytes).asLongBuffer().get(out)
     out
   }
 

@@ -156,6 +156,16 @@ class AuditStreamingSpec extends AnyFunSuite {
     }
     assert(stale.getMessage.contains("plan_fingerprint"))
     assert(spark.read.parquet(s"$auditDir/violations/r/*").count() == violations)
+
+    // so does a run id holding per-unit `<unitId>.json` records, the
+    // layout before batch manifests
+    val earlier = java.nio.file.Paths.get(tempDir("graft_audit"))
+    java.nio.file.Files.createDirectories(earlier.resolve("commits/r"))
+    java.nio.file.Files.writeString(earlier.resolve("commits/r/u0.json"), "{}")
+    val layout = intercept[IllegalStateException] {
+      CheckpointedRun.run(spark, tableDir, plan, earlier.toString, "r", Seq("o_orderkey"))
+    }
+    assert(layout.getMessage.contains("earlier layout"))
   }
 
   test("checkpointed run: units under a path with a space, % and + commit their own counts") {
@@ -173,6 +183,37 @@ class AuditStreamingSpec extends AnyFunSuite {
       assert((u.rows, u.invalidRows, u.violations) == expect, s"unit ${u.unit}")
     }
     assert(summary.invalidRows > 0)
+  }
+
+  test("checkpointed run: a table's own unit_id column is checked and kept as a key") {
+    val tableDir = tempDir("graft_table")
+    spark.read.parquet(orders).withColumn("unit_id", col("o_orderkey") % 7)
+      .repartition(3).write.mode("overwrite").parquet(tableDir)
+    val df = spark.read.parquet(tableDir)
+    val plan = Validation.compile(
+      """{"properties": {"unit_id": {"maximum": 4}, "o_totalprice": {"maximum": 200000}}}""",
+      df.schema)
+    val keys = Seq("o_orderkey", "unit_id")
+    val auditDir = tempDir("graft_audit")
+    val summary = CheckpointedRun.run(spark, tableDir, plan, auditDir, "r", keys)
+    val direct = plan.violations(df, keys)
+    assert((summary.rows, summary.invalidRows, summary.violations) ==
+      ((df.count(), df.where(!plan.isValidCol).count(), direct.count())))
+    assert(df.where(col("unit_id") > 4).count() > 0)
+    // the violation rows on disk carry the table's unit_id values
+    val onDisk = spark.read.parquet(s"$auditDir/violations/r/*")
+      .select(direct.columns.map(col).toSeq: _*)
+    assert(onDisk.exceptAll(direct).isEmpty && direct.exceptAll(onDisk).isEmpty)
+
+    // the run's own tag columns are reserved: rejected before anything is written
+    val tagged = tempDir("graft_table")
+    spark.read.parquet(orders).withColumn("_graft_unit", lit(1)).write.mode("overwrite").parquet(tagged)
+    val taggedAudit = tempDir("graft_audit")
+    val e = intercept[IllegalArgumentException] {
+      CheckpointedRun.run(spark, tagged, plan, taggedAudit, "r", Seq("o_orderkey"))
+    }
+    assert(e.getMessage.contains("_graft_unit"))
+    assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(taggedAudit, "violations")))
   }
 
   // readStream needs a directory source

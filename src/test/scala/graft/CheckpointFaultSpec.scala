@@ -15,12 +15,13 @@ class CheckpointFaultSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   val keys = Seq("o_orderkey")
 
-  lazy val tableDir: String = {
+  private def ordersTable(files: Int): String = {
     val d = Files.createTempDirectory("graft_table").toString
     spark.read.parquet("/root/testdata/sf0.001/orders.parquet")
-      .repartition(4).write.mode("overwrite").parquet(d)
+      .repartition(files).write.mode("overwrite").parquet(d)
     d
   }
+  lazy val tableDir: String = ordersTable(4)
   lazy val df = spark.read.parquet(tableDir)
   lazy val plan = Validation.compile("""{
     "properties": {"o_totalprice": {"maximum": 200000}, "o_orderstatus": {"enum": ["F", "O"]}},
@@ -34,16 +35,22 @@ class CheckpointFaultSpec extends AnyFunSuite {
       val s = Files.list(dir)
       try s.toArray.toSeq.map(_.asInstanceOf[Path].getFileName.toString) finally s.close()
     }
-  private def unitRecords(audit: String): Seq[String] =
-    files(Paths.get(audit, "commits", "r")).filter(_.endsWith(".json"))
+
+  /** The commit records of run `r`: the lines of its batch manifests. */
+  private def unitRecords(audit: String): Seq[String] = {
+    val commits = Paths.get(audit, "commits", "r")
+    files(commits).filter(_.endsWith(".jsonl"))
+      .flatMap(m => Files.readString(commits.resolve(m)).linesIterator)
+  }
 
   /** A run that crashes: `step` runs at each commit step (it throws at the
-    * step under test), `failAfterUnits` and `p` are passed to the run. */
+    * step under test); `failAfterUnits`, `p` and `table` are passed to the
+    * run. */
   private def crash(audit: String, step: String => Unit = _ => (),
                     failAfterUnits: Int = Int.MaxValue,
-                    p: graft.run.ValidationPlan = plan): Throwable = {
+                    p: graft.run.ValidationPlan = plan, table: String = tableDir): Throwable = {
     CheckpointedRun.onCommitStep = step
-    try intercept[Exception](CheckpointedRun.run(spark, tableDir, p, audit, "r", keys, failAfterUnits))
+    try intercept[Exception](CheckpointedRun.run(spark, table, p, audit, "r", keys, failAfterUnits))
     finally CheckpointedRun.onCommitStep = _ => ()
   }
 
@@ -58,7 +65,7 @@ class CheckpointFaultSpec extends AnyFunSuite {
       ((rows, invalid, violations, 4L)))
     val onDisk = spark.read.parquet(s"$audit/violations/r/*")
     assert(onDisk.count() == violations)
-    assert(onDisk.select("unit_id").distinct().count() ==
+    assert(onDisk.select("_graft_unit_id").distinct().count() ==
       summary.units.count(_.violations > 0))
     val (again, jobs) = jobsDuring(CheckpointedRun.run(spark, tableDir, plan, audit, "r", keys))
     assert(again.resumedUnits == 4 && jobs == 0, s"resumed ${again.resumedUnits} units in $jobs jobs")
@@ -86,7 +93,7 @@ class CheckpointFaultSpec extends AnyFunSuite {
     assert(unitRecords(a).isEmpty)
     // a partial batch directory as a direct-write committer leaves it
     val partial = Paths.get(a, "violations", "r", "b0-partial")
-    plan.violations(df, keys).withColumn("unit_id", lit("u0")).write.parquet(partial.toString)
+    plan.violations(df, keys).withColumn("_graft_unit_id", lit("u0")).write.parquet(partial.toString)
     resumeExactly(a)
     assert(!Files.exists(partial))
   }
@@ -94,30 +101,35 @@ class CheckpointFaultSpec extends AnyFunSuite {
   test("crash after the manifest's temp file is written") {
     val a = audit()
     crash(a, s => if (s == "manifest-temp") throw new RuntimeException("crash"))
-    assert(files(Paths.get(a, "commits", "r", "_batches")).exists(_.endsWith(".tmp")))
+    assert(files(Paths.get(a, "commits", "r")).exists(_.endsWith(".jsonl.tmp")))
     assert(files(Paths.get(a, "violations", "r")).size == 1 && unitRecords(a).isEmpty)
     resumeExactly(a)
-    assert(files(Paths.get(a, "commits", "r", "_batches")).forall(_.endsWith(".jsonl")))
+    assert(files(Paths.get(a, "commits", "r")).forall(_.endsWith(".jsonl")))
   }
 
-  test("crash after the manifest rename, before fan-out") {
+  test("crash after the manifest rename") {
     val a = audit()
     crash(a, s => if (s == "manifest") throw new RuntimeException("crash"))
-    assert(unitRecords(a).isEmpty)
-    // the published manifest commits the batch: the resume only fans out
-    val (_, jobs) = jobsDuring(CheckpointedRun.run(spark, tableDir, plan, a, "r", keys))
-    assert(jobs == 0 && unitRecords(a).size == 4)
+    assert(unitRecords(a).size == 4)
+    // the published manifest commits the batch: the resume runs no job
+    val (again, jobs) = jobsDuring(CheckpointedRun.run(spark, tableDir, plan, a, "r", keys))
+    assert(jobs == 0 && again.resumedUnits == 4)
     resumeExactly(a)
   }
 
-  test("crash midway through fan-out") {
+  test("a crash between batches loses only the batch in flight") {
+    val n = CheckpointedRun.BatchUnits + 1
+    val table = ordersTable(n)
+    assert(CheckpointedRun.listUnits(table).size == n)
     val a = audit()
-    var records = 0
-    crash(a, s => if (s == "fan-out") {
-      if (records == 2) throw new RuntimeException("crash")
-      records += 1
-    })
-    assert(unitRecords(a).size == 2)
-    resumeExactly(a)
+    crash(a, s => if (s == "manifest") throw new RuntimeException("crash"), table = table)
+    assert(unitRecords(a).size == CheckpointedRun.BatchUnits)
+    val summary = CheckpointedRun.run(spark, table, plan, a, "r", keys)
+    assert(summary.resumedUnits == CheckpointedRun.BatchUnits)
+    val t = spark.read.parquet(table)
+    assert((summary.rows, summary.invalidRows, summary.violations) ==
+      ((t.count(), t.where(!plan.isValidCol).count(), plan.violations(t, keys).count())))
+    assert(spark.read.parquet(s"$a/violations/r/*").count() == summary.violations)
+    assert(unitRecords(a).size == n)
   }
 }
