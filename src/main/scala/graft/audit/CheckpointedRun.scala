@@ -8,6 +8,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftshim.ColumnBridge
 import graft.functions.UnitTally.unit_tally
 import graft.run.ValidationPlan
+import graft.spec.{JNum, JObj, JStr, JsonValue}
 
 /** Resumable, per-unit checkpointed validation runs (north rule:
   * "resumable from per-partition checkpoints with lineage + metrics
@@ -114,7 +115,7 @@ object CheckpointedRun {
         "earlier layout (use a new runId to re-validate)")
     val manifests = listed.filter(_.endsWith(".jsonl"))
     val records = manifests.iterator
-      .flatMap(m => Files.readString(commits.resolve(m)).linesIterator).map(fields)
+      .flatMap(m => Files.readString(commits.resolve(m)).linesIterator).map(record)
       .map(f => f("unit_id") -> f).toMap
     val fp = planFingerprint(plan)
     val units = listUnits(tablePath)
@@ -148,7 +149,7 @@ object CheckpointedRun {
       throw new IllegalStateException(
         s"resume mismatch for $unit: commit has plan_fingerprint=${f("plan_fingerprint")}, " +
           s"current plan is $fp (use a new runId to re-validate with a different plan)")
-    if (f("unit") != unit.replace("\\", "/"))
+    if (f("unit") != unit)
       throw new IllegalStateException(
         s"resume mismatch: commit ${f("unit_id")} records unit '${f("unit")}' but was matched to '$unit'")
     UnitResult(unit, f("rows").toLong, f("invalid_rows").toLong, f("violations").toLong,
@@ -187,8 +188,12 @@ object CheckpointedRun {
       UnitResult(u, t(3 * i), t(3 * i + 1), t(3 * i + 2), skipped = false)
     }
     // single-line records: the audit log is read as JSON-lines
-    val records = results.map(r =>
-      s"""{"run_id":"$runId","unit":"${r.unit.replace("\\", "/")}","unit_id":"${unitId(r.unit)}","plan_fingerprint":"$fp","engine":"graft-0.1.0","rows":${r.rows},"invalid_rows":${r.invalidRows},"violations":${r.violations},"started_at":$started,"finished_at":$finished}""")
+    def num(v: Long) = JNum(BigDecimal(v))
+    val records = results.map(r => JsonValue.render(JObj(Vector(
+      "run_id" -> JStr(runId), "unit" -> JStr(r.unit), "unit_id" -> JStr(unitId(r.unit)),
+      "plan_fingerprint" -> JStr(fp), "engine" -> JStr("graft-0.1.0"), "rows" -> num(r.rows),
+      "invalid_rows" -> num(r.invalidRows), "violations" -> num(r.violations),
+      "started_at" -> num(started), "finished_at" -> num(finished)))))
     publish(Paths.get(auditDir, "commits", runId, s"$batchId.jsonl"), records.mkString("\n"),
       onCommitStep("manifest-temp"))
     onCommitStep("manifest")
@@ -223,13 +228,13 @@ object CheckpointedRun {
   def auditLog(spark: SparkSession, auditDir: String, runId: String): DataFrame =
     spark.read.option("pathGlobFilter", "*.jsonl").json(s"$auditDir/commits/$runId")
 
-  private val Field = java.util.regex.Pattern.compile("\"(\\w+)\":(?:\"([^\"]*)\"|(-?\\d+))")
-
-  /** The string and integer fields of a flat one-line commit record. */
-  private def fields(rec: String): Map[String, String] = {
-    val m = Field.matcher(rec)
-    val out = Map.newBuilder[String, String]
-    while (m.find()) out += m.group(1) -> Option(m.group(2)).getOrElse(m.group(3))
-    out.result()
+  /** The fields of a one-line commit record: strings as their text,
+    * numbers rendered. */
+  private def record(line: String): Map[String, String] = JsonValue.parse(line) match {
+    case JObj(fs) => fs.map {
+      case (k, JStr(s)) => k -> s
+      case (k, v)       => k -> JsonValue.render(v)
+    }.toMap
+    case _ => throw new IllegalStateException(s"commit record is not a JSON object: $line")
   }
 }

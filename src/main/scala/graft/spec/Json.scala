@@ -1,8 +1,5 @@
 package graft.spec
 
-import com.fasterxml.jackson.databind.JsonNode
-import scala.jdk.CollectionConverters._
-
 /** Minimal JSON value model for constraint specs and test instances.
   *
   * Mirrors the reference's instance model
@@ -112,16 +109,14 @@ object JsonType {
 }
 
 object JsonValue {
-  /** Direct recursive-descent parse into the value tree. A per-document
-    * hot path (the contentSchema kernel parses one document per ROW):
-    * avoids jackson's per-call parser/IOContext/buffer setup and its
-    * token-event indirection — strings and field names are single-alloc
-    * substrings, i64-range int tokens wrap a long (scale-0 BigDecimal,
-    * same compare semantics), other numbers are exact BigDecimals of the
-    * raw token text. RFC 8259 grammar; one value read, trailing tokens
-    * ignored (same laxity as the previous streaming form, so verdicts on
-    * concatenated/garbage-tailed inputs are unchanged). */
-  def parse(text: String): JsonValue = new Parser(text).parseRoot()
+  /** Parse the first JSON value of `text` into the value tree, through
+    * the one lexer (`Cur`). A per-document hot path (the contentSchema
+    * kernel parses one document per ROW): strings and field names are
+    * single-alloc substrings, i64-range int tokens wrap a long (scale-0
+    * BigDecimal, same compare semantics), other numbers are exact
+    * BigDecimals of the raw token text. RFC 8259 grammar; trailing tokens
+    * are ignored, as on the streaming path. */
+  def parse(text: String): JsonValue = Cur.root(text).readTree()
 
   /** Bounded field-name intern pool (jackson's name canonicalization,
     * for our tree): keys recur endlessly across documents, and validator
@@ -160,237 +155,6 @@ object JsonValue {
       slots.lazySet(idx, s)
       s
     }
-  }
-
-  /** `private[spec]` + seek/pos so the streaming validator (Streaming.scala)
-    * materializes subtrees through THIS parser — one grammar, one intern
-    * pool, identical trees on both paths. */
-  private[spec] final class Parser(s: String) {
-    private[this] var i = 0
-    private[this] val n = s.length
-
-    def seekTo(k: Int): Unit = { i = k }
-    def pos: Int = i
-
-    private def err(msg: String): Nothing =
-      throw new java.io.IOException(s"$msg at offset $i")
-
-    private def ws(): Unit = {
-      while (i < n && { val c = s.charAt(i); c == ' ' || c == '\t' || c == '\n' || c == '\r' })
-        i += 1
-    }
-
-    def parseRoot(): JsonValue = {
-      ws()
-      if (i >= n) throw new java.io.IOException("empty JSON input")
-      parseValue()
-    }
-
-    private[spec] def parseValue(): JsonValue = {
-      ws()
-      if (i >= n) err("unexpected end of input")
-      (s.charAt(i): @annotation.switch) match {
-        case '{' => parseObj()
-        case '[' => parseArr()
-        case '"' => JStr(parseString())
-        case 't' => expectWord("true"); JBool(true)
-        case 'f' => expectWord("false"); JBool(false)
-        case 'n' => expectWord("null"); JNull
-        case _   => parseNumber()
-      }
-    }
-
-    private def expectWord(w: String): Unit = {
-      if (i + w.length > n || !s.regionMatches(i, w, 0, w.length)) err(s"expected '$w'")
-      i += w.length
-    }
-
-    private def parseObj(): JObj = {
-      i += 1 // '{'
-      ws()
-      if (i < n && s.charAt(i) == '}') { i += 1; return JObj(Vector.empty) }
-      val b = Vector.newBuilder[(String, JsonValue)]
-      var done = false
-      while (!done) {
-        ws()
-        if (i >= n || s.charAt(i) != '"') err("expected field name")
-        val k = parseFieldName()
-        ws()
-        if (i >= n || s.charAt(i) != ':') err("expected ':'")
-        i += 1
-        b += k -> parseValue()
-        ws()
-        if (i >= n) err("unterminated object")
-        s.charAt(i) match {
-          case ',' => i += 1
-          case '}' => i += 1; done = true
-          case _   => err("expected ',' or '}'")
-        }
-      }
-      JObj(b.result())
-    }
-
-    private def parseArr(): JArr = {
-      i += 1 // '['
-      ws()
-      if (i < n && s.charAt(i) == ']') { i += 1; return JArr(Vector.empty) }
-      val b = Vector.newBuilder[JsonValue]
-      var done = false
-      while (!done) {
-        b += parseValue()
-        ws()
-        if (i >= n) err("unterminated array")
-        s.charAt(i) match {
-          case ',' => i += 1
-          case ']' => i += 1; done = true
-          case _   => err("expected ',' or ']'")
-        }
-      }
-      JArr(b.result())
-    }
-
-    /** Field names intern straight from the source range (no substring
-      * allocation on the no-escape fast path). */
-    /** The first position in [from, q) holding '\\' or an unescaped
-      * control char, or q when the span is clean. The quote position `q`
-      * comes from the SIMD `String.indexOf` intrinsic; this vet loop is
-      * branch-free per char so the common clean span costs two compares
-      * per char with no mispredicts. */
-    private def vetSpan(from: Int, q: Int): Int = {
-      var j = from
-      var bad = false
-      while (j < q) {
-        val c = s.charAt(j)
-        bad |= (c == '\\') | (c < ' ')
-        j += 1
-      }
-      if (!bad) q
-      else {
-        var k = from
-        while (s.charAt(k) != '\\' && s.charAt(k) >= ' ') k += 1
-        k
-      }
-    }
-
-    private def parseFieldName(): String = {
-      i += 1 // opening '"'
-      val start = i
-      val q = s.indexOf('"', i)
-      if (q < 0) err("unterminated string")
-      val p = vetSpan(i, q)
-      if (p == q) { i = q + 1; return FieldIntern.internRange(s, start, q) }
-      i = p
-      if (s.charAt(p) == '\\') FieldIntern.intern(parseStringSlow(start))
-      else err("unescaped control character in string")
-    }
-
-    private def parseString(): String = {
-      i += 1 // opening '"'
-      val start = i
-      // fast path: no escapes → one substring
-      val q = s.indexOf('"', i)
-      if (q < 0) err("unterminated string")
-      val p = vetSpan(i, q)
-      if (p == q) { i = q + 1; return s.substring(start, q) }
-      i = p
-      if (s.charAt(p) == '\\') parseStringSlow(start)
-      else err("unescaped control character in string")
-    }
-
-    private def parseStringSlow(start: Int): String = {
-      val sb = new java.lang.StringBuilder(i - start + 16)
-      sb.append(s, start, i)
-      while (i < n) {
-        val c = s.charAt(i)
-        if (c == '"') { i += 1; return sb.toString }
-        else if (c == '\\') {
-          i += 1
-          if (i >= n) err("unterminated escape")
-          (s.charAt(i): @annotation.switch) match {
-            case '"'  => sb.append('"');  i += 1
-            case '\\' => sb.append('\\'); i += 1
-            case '/'  => sb.append('/');  i += 1
-            case 'b'  => sb.append('\b'); i += 1
-            case 'f'  => sb.append('\f'); i += 1
-            case 'n'  => sb.append('\n'); i += 1
-            case 'r'  => sb.append('\r'); i += 1
-            case 't'  => sb.append('\t'); i += 1
-            case 'u'  =>
-              if (i + 5 > n) err("truncated \\u escape")
-              var cp = 0
-              var j = i + 1
-              while (j < i + 5) {
-                val h = Character.digit(s.charAt(j), 16)
-                if (h < 0) err("bad hex in \\u escape")
-                cp = (cp << 4) | h
-                j += 1
-              }
-              sb.append(cp.toChar) // surrogate pairs arrive as two escapes
-              i += 5
-            case _ => err("bad escape")
-          }
-        }
-        else if (c < ' ') err("unescaped control character in string")
-        else { sb.append(c); i += 1 }
-      }
-      err("unterminated string")
-    }
-
-    /** Strict JSON number grammar: -?(0|[1-9][0-9]*)(\.[0-9]+)?([eE][+-]?[0-9]+)? */
-    private def parseNumber(): JNum = {
-      val start = i
-      if (i < n && s.charAt(i) == '-') i += 1
-      if (i >= n) err("malformed number")
-      val c0 = s.charAt(i)
-      if (c0 == '0') i += 1
-      else if (c0 >= '1' && c0 <= '9') { i += 1; skipDigits() }
-      else err("malformed number")
-      var intOnly = true
-      if (i < n && s.charAt(i) == '.') {
-        intOnly = false
-        i += 1
-        if (i >= n || !isDigit(s.charAt(i))) err("malformed number")
-        skipDigits()
-      }
-      if (i < n && { val c = s.charAt(i); c == 'e' || c == 'E' }) {
-        intOnly = false
-        i += 1
-        if (i < n && { val c = s.charAt(i); c == '+' || c == '-' }) i += 1
-        if (i >= n || !isDigit(s.charAt(i))) err("malformed number")
-        skipDigits()
-      }
-      val len = i - start
-      if (intOnly && len <= 18) {
-        // fits a long without overflow checks (<= 18 digits)
-        var v = 0L
-        var j = if (s.charAt(start) == '-') start + 1 else start
-        while (j < i) { v = v * 10 + (s.charAt(j) - '0'); j += 1 }
-        JNum(BigDecimal(if (s.charAt(start) == '-') -v else v))
-      } else
-        // grammar-valid but unrepresentable magnitudes (e.g. an exponent
-        // past BigDecimal's int scale) are PARSE errors, like serde's
-        // "number out of range" — never an engine crash
-        try JNum(BigDecimal(new java.math.BigDecimal(s.substring(start, i))))
-        catch { case e: NumberFormatException =>
-          { i = start; err("number out of range") }
-        }
-    }
-
-    private def isDigit(c: Char): Boolean = c >= '0' && c <= '9'
-    private def skipDigits(): Unit = {
-      while (i < n && isDigit(s.charAt(i))) i += 1
-    }
-  }
-
-  def fromNode(n: JsonNode): JsonValue = {
-    if (n == null || n.isNull) JNull
-    else if (n.isBoolean) JBool(n.booleanValue())
-    else if (n.isNumber) JNum(BigDecimal(n.decimalValue()))
-    else if (n.isTextual) JStr(n.textValue())
-    else if (n.isArray) JArr(n.elements().asScala.map(fromNode).toVector)
-    else if (n.isObject)
-      JObj(n.properties().asScala.map(e => e.getKey -> fromNode(e.getValue)).toVector)
-    else sys.error(s"unsupported JSON node: $n")
   }
 
   /** JSON-Schema equality: math equality for numbers, deep for containers
@@ -434,5 +198,305 @@ object JsonValue {
       case c => sb.append(c)
     }
     sb.append('"').toString
+  }
+}
+
+/** The JSON lexer: a strict RFC 8259 cursor over the source text, and the
+  * only one. `JsonValue.parse` reads trees through it; the streaming
+  * validator (`Streaming`) reads, skips and dispatches tokens off it and
+  * materializes subtrees with the same `readTree`, so both paths share one
+  * grammar and one field-name intern pool. Errors are `IOException`s that
+  * name the offset. */
+private[spec] final class Cur(val s: String) {
+  var i = 0
+  private[this] val n = s.length
+  /** Start of the text of the last string token `scanString` consumed. */
+  var tok = 0
+
+  def bump(): Unit = i += 1
+
+  def err(msg: String): Nothing =
+    throw new java.io.IOException(s"$msg at offset $i")
+
+  def ws(): Unit = {
+    while (i < n && { val c = s.charAt(i); c == ' ' || c == '\t' || c == '\n' || c == '\r' })
+      i += 1
+  }
+
+  /** Current char after ws(); errs at end of input. */
+  def peek: Char = {
+    if (i >= n) err("unexpected end of input")
+    s.charAt(i)
+  }
+
+  def expect(c: Char): Unit = {
+    if (i >= n || s.charAt(i) != c) err(s"expected '$c'")
+    i += 1
+  }
+
+  def word(w: String): Unit = {
+    if (i + w.length > n || !s.regionMatches(i, w, 0, w.length)) err(s"expected '$w'")
+    i += w.length
+  }
+
+  /** After an object member or array item: true on ',' (another one
+    * follows), false on `close`. */
+  def more(close: Char): Boolean = {
+    ws()
+    if (i >= n) err(if (close == '}') "unterminated object" else "unterminated array")
+    val c = s.charAt(i)
+    if (c != ',' && c != close) err(s"expected ',' or '$close'")
+    i += 1
+    c == ','
+  }
+
+  /** Read one value into a tree; field names go through `FieldIntern`. */
+  def readTree(): JsonValue = {
+    ws()
+    (peek: @annotation.switch) match {
+      case '{' =>
+        i += 1; ws()
+        if (peek == '}') { i += 1; return JObj(Vector.empty) }
+        val b = Vector.newBuilder[(String, JsonValue)]
+        var next = true
+        while (next) {
+          ws()
+          val k = readFieldName()
+          ws(); expect(':')
+          b += k -> readTree()
+          next = more('}')
+        }
+        JObj(b.result())
+      case '[' =>
+        i += 1; ws()
+        if (peek == ']') { i += 1; return JArr(Vector.empty) }
+        val b = Vector.newBuilder[JsonValue]
+        var next = true
+        while (next) {
+          b += readTree()
+          next = more(']')
+        }
+        JArr(b.result())
+      case '"' => JStr(readString())
+      case 't' => word("true"); JBool(true)
+      case 'f' => word("false"); JBool(false)
+      case 'n' => word("null"); JNull
+      case _   => readNumber()
+    }
+  }
+
+  /** Skip one value, grammar-checked like `readTree` (a VALID streaming
+    * verdict must imply the document parses). */
+  def skipValue(): Unit = {
+    ws()
+    (peek: @annotation.switch) match {
+      case '"' => skipString()
+      case '{' =>
+        i += 1; ws()
+        if (peek == '}') { i += 1; return }
+        var next = true
+        while (next) {
+          ws()
+          skipFieldName()
+          ws(); expect(':')
+          skipValue()
+          next = more('}')
+        }
+      case '[' =>
+        i += 1; ws()
+        if (peek == ']') { i += 1; return }
+        var next = true
+        while (next) {
+          skipValue()
+          next = more(']')
+        }
+      case 't' => word("true")
+      case 'f' => word("false")
+      case 'n' => word("null")
+      case _   => { scanNumber(); () }
+    }
+  }
+
+  /** Consume a field name; null when it holds no escape (its text is
+    * then the source span [tok, i - 1)), else its decoded text. */
+  def scanFieldName(): String = {
+    if (i >= n || s.charAt(i) != '"') err("expected field name")
+    scanString()
+  }
+
+  /** A field name, interned straight from the source span when it holds
+    * no escape (no substring allocated). */
+  def readFieldName(): String = {
+    val d = scanFieldName()
+    if (d == null) JsonValue.FieldIntern.internRange(s, tok, i - 1)
+    else JsonValue.FieldIntern.intern(d)
+  }
+
+  /** A field name nobody reads, grammar-checked only. */
+  def skipFieldName(): Unit = { scanFieldName(); () }
+
+  def readString(): String = {
+    val d = scanString()
+    if (d == null) s.substring(tok, i - 1) else d
+  }
+
+  def skipString(): Unit = { scanString(); () }
+
+  /** Consume a string (opening quote at the cursor, checked by the
+    * caller); null when it holds no escape, else its decoded text. */
+  private def scanString(): String = {
+    i += 1
+    tok = i
+    val q = s.indexOf('"', i)
+    if (q < 0) err("unterminated string")
+    val p = vetSpan(i, q)
+    if (p == q) { i = q + 1; return null }
+    i = p
+    if (s.charAt(p) == '\\') readStringSlow(tok)
+    else err("unescaped control character in string")
+  }
+
+  /** The first position in [from, q) holding '\\' or an unescaped
+    * control char, or q when the span is clean. The quote position `q`
+    * comes from the SIMD `String.indexOf` intrinsic; this vet loop is
+    * branch-free per char so the common clean span costs two compares
+    * per char with no mispredicts. */
+  private def vetSpan(from: Int, q: Int): Int = {
+    var j = from
+    var bad = false
+    while (j < q) {
+      val c = s.charAt(j)
+      bad |= (c == '\\') | (c < ' ')
+      j += 1
+    }
+    if (!bad) q
+    else {
+      var k = from
+      while (s.charAt(k) != '\\' && s.charAt(k) >= ' ') k += 1
+      k
+    }
+  }
+
+  private def readStringSlow(start: Int): String = {
+    val sb = new java.lang.StringBuilder(i - start + 16)
+    sb.append(s, start, i)
+    while (i < n) {
+      val c = s.charAt(i)
+      if (c == '"') { i += 1; return sb.toString }
+      else if (c == '\\') {
+        i += 1
+        if (i >= n) err("unterminated escape")
+        (s.charAt(i): @annotation.switch) match {
+          case '"'  => sb.append('"');  i += 1
+          case '\\' => sb.append('\\'); i += 1
+          case '/'  => sb.append('/');  i += 1
+          case 'b'  => sb.append('\b'); i += 1
+          case 'f'  => sb.append('\f'); i += 1
+          case 'n'  => sb.append('\n'); i += 1
+          case 'r'  => sb.append('\r'); i += 1
+          case 't'  => sb.append('\t'); i += 1
+          case 'u'  =>
+            if (i + 5 > n) err("truncated \\u escape")
+            var cp = 0
+            var j = i + 1
+            while (j < i + 5) {
+              val h = Character.digit(s.charAt(j), 16)
+              if (h < 0) err("bad hex in \\u escape")
+              cp = (cp << 4) | h
+              j += 1
+            }
+            sb.append(cp.toChar) // surrogate pairs arrive as two escapes
+            i += 5
+          case _ => err("bad escape")
+        }
+      }
+      else if (c < ' ') err("unescaped control character in string")
+      else { sb.append(c); i += 1 }
+    }
+    err("unterminated string")
+  }
+
+  private def isDigit(c: Char): Boolean = c >= '0' && c <= '9'
+  private def skipDigits(): Unit = { while (i < n && isDigit(s.charAt(i))) i += 1 }
+
+  /** Scan a number token (strict grammar:
+    * -?(0|[1-9][0-9]*)(\.[0-9]+)?([eE][+-]?[0-9]+)?), leaving the cursor
+    * after it. Returns true when the token has no '.'/'e' part (surely
+    * integral — the converse is NOT surely fractional: 1.0 and 1e2 are
+    * integral). */
+  def scanNumber(): Boolean = {
+    val start = i
+    if (i < n && s.charAt(i) == '-') i += 1
+    if (i >= n) err("malformed number")
+    val c0 = s.charAt(i)
+    if (c0 == '0') i += 1
+    else if (c0 >= '1' && c0 <= '9') { i += 1; skipDigits() }
+    else err("malformed number")
+    var intOnly = true
+    if (i < n && s.charAt(i) == '.') {
+      intOnly = false
+      i += 1
+      if (i >= n || !isDigit(s.charAt(i))) err("malformed number")
+      skipDigits()
+    }
+    if (i < n && { val c = s.charAt(i); c == 'e' || c == 'E' }) {
+      intOnly = false
+      i += 1
+      if (i < n && { val c = s.charAt(i); c == '+' || c == '-' }) i += 1
+      if (i >= n || !isDigit(s.charAt(i))) err("malformed number")
+      var expStart = i
+      skipDigits()
+      // readNumber rejects unrepresentable magnitudes ("number out of
+      // range") — the grammar skip must agree, or a skipped value would
+      // stream as valid where parse throws. Suspicious shape (an exponent
+      // past 9 significant digits) is vetted through the same BigDecimal
+      // construction (rare path).
+      while (expStart < i && s.charAt(expStart) == '0') expStart += 1
+      if (i - expStart > 9) {
+        try { new java.math.BigDecimal(s.substring(start, i)); () }
+        catch { case _: NumberFormatException =>
+          { i = start; err("number out of range") }
+        }
+      }
+    }
+    intOnly
+  }
+
+  def readNumber(): JNum = {
+    val start = i
+    val intOnly = scanNumber()
+    numFromSpan(start, intOnly)
+  }
+
+  /** Materialize the number token already scanned from `start` up to
+    * the cursor (split out of readNumber so callers that learn from
+    * scanNumber() alone that no value is needed can skip this): a long
+    * for integer tokens of at most 18 digits, else an exact BigDecimal of
+    * the token text. */
+  def numFromSpan(start: Int, intOnly: Boolean): JNum = {
+    val len = i - start
+    if (intOnly && len <= 18) {
+      var v = 0L
+      var j = if (s.charAt(start) == '-') start + 1 else start
+      while (j < i) { v = v * 10 + (s.charAt(j) - '0'); j += 1 }
+      JNum(BigDecimal(if (s.charAt(start) == '-') -v else v))
+    } else
+      // grammar-valid but unrepresentable magnitudes (e.g. an exponent
+      // past BigDecimal's int scale) are PARSE errors, like serde's
+      // "number out of range" — never an engine crash
+      try JNum(BigDecimal(new java.math.BigDecimal(s.substring(start, i))))
+      catch { case _: NumberFormatException =>
+        { i = start; err("number out of range") }
+      }
+  }
+}
+
+private[spec] object Cur {
+  /** A cursor at the first value of `text`, past leading whitespace. */
+  def root(text: String): Cur = {
+    val c = new Cur(text)
+    c.ws()
+    if (c.i == text.length) throw new java.io.IOException("empty JSON input")
+    c
   }
 }

@@ -19,10 +19,10 @@ import scala.collection.mutable.ArrayBuffer
   *    reachable over `$ref`/`allOf`/dispatched `anyOf`/`oneOf` edges)
   *    contains only order-independent keywords, single-resource, so checks
   *    fuse into one token-dispatched pass; or
-  *  - MATERIALIZES: the value at that position is tree-parsed (through
-  *    `JsonValue.Parser` — one grammar, one intern pool) and handed to the
-  *    node's compiled twin built by `Compiled.Sub` with the same
-  *    same-value cycle-cut chain, so verdicts are `Compiled`'s by
+  *  - MATERIALIZES: the value at that position is read into a tree by
+  *    the same cursor (`Cur.readTree`, the lexer `JsonValue.parse` uses)
+  *    and handed to the node's compiled twin built by `Compiled.Sub` with
+  *    the same same-value cycle-cut chain, so verdicts are `Compiled`'s by
   *    construction.
   *
   * Non-streamable constructs (whole-node materialization): `not`,
@@ -47,30 +47,22 @@ object Streaming {
     override def fillInStackTrace(): Throwable = this
   }
 
+  /** Grammar-only vet: does `text` lex as one JSON value? Runs the strict
+    * RFC 8259 skip (no tree); agreement with `JsonValue.parse` acceptance
+    * is pinned by LexerDifferentialSpec. Used by contentSchemaValid to
+    * split invalid-from-malformed without re-building a tree (ADVICE r04
+    * #4). */
+  def grammarOk(text: String): Boolean =
+    try { Cur.root(text).skipValue(); true }
+    catch { case _: java.io.IOException => false }
 
   /** Compiled streaming validator for `entry`; None when the tree-side
     * twin compiler exceeds its budget (caller falls back to parse+walk). */
-  /** Grammar-only vet: does `text` lex as one JSON value? Runs the strict
-    * RFC 8259 skip (no tree, no allocation); agreement with
-    * `JsonValue.parse` acceptance is pinned by LexerDifferentialSpec.
-    * Used by contentSchemaValid to split invalid-from-malformed without
-    * re-building a tree (ADVICE r04 #4). */
-  def grammarOk(text: String): Boolean = {
-    val c = new Cur(text)
-    try { c.ws(); c.skipValue(); true }
-    catch { case _: java.io.IOException => false }
-  }
-
   def compile(registry: Registry, entry: Spec, assertFormats: Boolean): Option[String => Boolean] =
     try {
       val c = new SCompiler(registry, entry, assertFormats)
       val root = c.rootRef()
-      Some { text =>
-        val cur = new Cur(text)
-        cur.ws()
-        if (cur.atEnd) throw new java.io.IOException("empty JSON input")
-        root.f(cur)
-      }
+      Some(text => root.f(Cur.root(text)))
     } catch { case t: RuntimeException if Compiled.isBail(t) => None }
 
   // ==== runtime structures ==================================================
@@ -91,7 +83,13 @@ object Streaming {
   private[spec] final class FieldProbe(maxLen: Int, names: Array[Array[String]],
                                  fps: Array[Array[FP]],
                                  map: java.util.HashMap[String, FP]) {
-    def lookup(s: String, start: Int, end: Int): FP = {
+    /** Consume the field name at the cursor and resolve it in place. */
+    def read(cur: Cur): FP = {
+      val d = cur.scanFieldName()
+      if (d == null) lookup(cur.s, cur.tok, cur.i - 1)
+      else map.get(d) // escaped name (rare): its decoded text
+    }
+    private def lookup(s: String, start: Int, end: Int): FP = {
       val len = end - start
       if (len > maxLen) return null
       val ns = names(len)
@@ -103,8 +101,6 @@ object Streaming {
       }
       null
     }
-    /** Escaped-name fallback (rare): plain map get on the decoded key. */
-    def lookupString(k: String): FP = map.get(k)
   }
   private[spec] object FieldProbe {
     def build(map: java.util.HashMap[String, FP]): FieldProbe = {
@@ -270,8 +266,8 @@ object Streaming {
       var count = 0
       if (cur.peek == '}') cur.bump()
       else {
-        var done = false
-        while (!done) {
+        var next = true
+        while (next) {
           cur.ws()
           cur.skipFieldName()
           cur.ws(); cur.expect(':')
@@ -287,12 +283,7 @@ object Streaming {
             }
           }
           count += 1
-          cur.ws()
-          (cur.readCh(): @annotation.switch) match {
-            case ',' => ()
-            case '}' => done = true
-            case _   => cur.err("expected ',' or '}'")
-          }
+          next = cur.more('}')
         }
       }
       return endObj(cons, masks, count)
@@ -311,10 +302,10 @@ object Streaming {
       var count = 0
       if (cur.peek == '}') cur.bump()
       else {
-        var done = false
-        while (!done) {
+        var next = true
+        while (next) {
           cur.ws()
-          val fp = cur.matchFieldName(probe)
+          val fp = probe.read(cur)
           cur.ws(); cur.expect(':')
           if (fp != null) {
             if (fp.reqBit >= 0) masks(0) |= 1L << fp.reqBit
@@ -326,12 +317,7 @@ object Streaming {
           } else if (oc.apS != null) { if (!oc.apS.f(cur)) return false }
           else cur.skipValue()
           count += 1
-          cur.ws()
-          (cur.readCh(): @annotation.switch) match {
-            case ',' => ()
-            case '}' => done = true
-            case _   => cur.err("expected ',' or '}'")
-          }
+          next = cur.more('}')
         }
       }
       return endObj(cons, masks, count)
@@ -339,8 +325,8 @@ object Streaming {
     var count = 0
     if (cur.peek == '}') cur.bump()
     else {
-      var done = false
-      while (!done) {
+      var next = true
+      while (next) {
         cur.ws()
         val key = cur.readFieldName()
         cur.ws(); cur.expect(':')
@@ -381,12 +367,7 @@ object Streaming {
           }
         }
         count += 1
-        cur.ws()
-        (cur.readCh(): @annotation.switch) match {
-          case ',' => ()
-          case '}' => done = true
-          case _   => cur.err("expected ',' or '}'")
-        }
+        next = cur.more('}')
       }
     }
     endObj(cons, masks, count)
@@ -515,8 +496,8 @@ object Streaming {
     var count = 0
     if (cur.peek == '}') cur.bump()
     else {
-      var done = false
-      while (!done) {
+      var next = true
+      while (next) {
         cur.ws()
         val key = cur.readFieldName()
         cur.ws(); cur.expect(':')
@@ -559,12 +540,8 @@ object Streaming {
             }
           }
           if (!handled) {
-            // branch membership unknown: materialize and buffer. A string
-            // value (the dominant case — it IS usually the tag) builds its
-            // JStr directly off the scanner instead of a tree-parser pass.
-            val v: JsonValue =
-              if (preRead != null) preRead
-              else if (cur.peek == '"') JStr(cur.readString()) else cur.readTree()
+            // branch membership unknown: materialize and buffer
+            val v = if (preRead != null) preRead else cur.readTree()
             if (bufK == null) { bufK = new ArrayBuffer[String](4); bufV = new ArrayBuffer[JsonValue](4) }
             bufK += key; bufV += v
             if (!feedTree(0, key, v)) return false
@@ -607,12 +584,7 @@ object Streaming {
           }
         }
         count += 1
-        cur.ws()
-        (cur.readCh(): @annotation.switch) match {
-          case ',' => ()
-          case '}' => done = true
-          case _   => cur.err("expected ',' or '}'")
-        }
+        next = cur.more('}')
       }
     }
     if (undecided > 0) return false // dispatch key absent ⇒ no branch selected
@@ -637,8 +609,8 @@ object Streaming {
     val seen: ArrayBuffer[JsonValue] = if (anyUniq) new ArrayBuffer[JsonValue](8) else null
     if (cur.peek == ']') cur.bump()
     else {
-      var done = false
-      while (!done) {
+      var next = true
+      while (next) {
         if (hasMat) {
           // contains/uniqueItems demand the item VALUE (match counting /
           // math-equality distinctness): materialize this item — not the
@@ -681,12 +653,7 @@ object Streaming {
           }
         }
         count += 1
-        cur.ws()
-        (cur.readCh(): @annotation.switch) match {
-          case ',' => ()
-          case ']' => done = true
-          case _   => cur.err("expected ',' or ']'")
-        }
+        next = cur.more(']')
       }
     }
     var ai = 0
@@ -1306,322 +1273,6 @@ object Streaming {
               acc.strC += (s => trial(JStr(s)))
             case None => throw Unstreamable
           }
-      }
-    }
-  }
-
-  // ==== cursor ================================================================
-
-  /** Strict RFC 8259 lexical cursor over the source text. Shares the
-    * grammar (and, for materialized subtrees, the actual parser + field
-    * intern pool) with JsonValue.parse. */
-  private[spec] final class Cur(val s: String) {
-    var i = 0
-    private[this] val n = s.length
-
-    def atEnd: Boolean = i >= n
-    def bump(): Unit = i += 1
-
-    def err(msg: String): Nothing =
-      throw new java.io.IOException(s"$msg at offset $i")
-
-    def ws(): Unit = {
-      while (i < n && { val c = s.charAt(i); c == ' ' || c == '\t' || c == '\n' || c == '\r' })
-        i += 1
-    }
-
-    /** Current char after ws(); errs at end of input. */
-    def peek: Char = {
-      if (i >= n) err("unexpected end of input")
-      s.charAt(i)
-    }
-
-    def readCh(): Char = {
-      if (i >= n) err("unexpected end of input")
-      val c = s.charAt(i); i += 1; c
-    }
-
-    def expect(c: Char): Unit = {
-      if (i >= n || s.charAt(i) != c) err(s"expected '$c'")
-      i += 1
-    }
-
-    def word(w: String): Unit = {
-      if (i + w.length > n || !s.regionMatches(i, w, 0, w.length)) err(s"expected '$w'")
-      i += w.length
-    }
-
-    /** Materialize one value through the shared tree parser. */
-    def readTree(): JsonValue = {
-      val p = new JsonValue.Parser(s)
-      p.seekTo(i)
-      val v = p.parseValue()
-      i = p.pos
-      v
-    }
-
-    def readFieldName(): String = {
-      if (i >= n || s.charAt(i) != '"') err("expected field name")
-      i += 1
-      val start = i
-      val q = s.indexOf('"', i)
-      if (q < 0) err("unterminated string")
-      val p = vetSpan(i, q)
-      if (p == q) {
-        i = q + 1
-        return JsonValue.FieldIntern.internRange(s, start, q)
-      }
-      i = p
-      if (s.charAt(p) == '\\') JsonValue.FieldIntern.intern(readStringSlow(start))
-      else err("unescaped control character in string")
-    }
-
-    /** Consume a field name and resolve it against `probe` IN PLACE —
-      * vetted like readFieldName but with no interning, no hashing and no
-      * substring on the unescaped path (r06 CITM hot path). Escaped names
-      * (rare) decode through the slow reader and probe by string. */
-    def matchFieldName(probe: FieldProbe): FP = {
-      if (i >= n || s.charAt(i) != '"') err("expected field name")
-      i += 1
-      val start = i
-      val q = s.indexOf('"', i)
-      if (q < 0) err("unterminated string")
-      val p = vetSpan(i, q)
-      if (p == q) { i = q + 1; return probe.lookup(s, start, q) }
-      i = p
-      if (s.charAt(p) == '\\') probe.lookupString(readStringSlow(start))
-      else err("unescaped control character in string")
-    }
-
-    /** Grammar-only field name: vetted like readFieldName, never interned
-      * (uniform-map fast path — the key is data nobody reads). */
-    def skipFieldName(): Unit = {
-      if (i >= n || s.charAt(i) != '"') err("expected field name")
-      i += 1
-      val start = i
-      val q = s.indexOf('"', i)
-      if (q < 0) err("unterminated string")
-      val p = vetSpan(i, q)
-      if (p == q) { i = q + 1; return }
-      i = p
-      if (s.charAt(p) == '\\') { readStringSlow(start); () }
-      else err("unescaped control character in string")
-    }
-
-    def readString(): String = {
-      i += 1 // opening '"' (caller peeked)
-      val start = i
-      val q = s.indexOf('"', i)
-      if (q < 0) err("unterminated string")
-      val p = vetSpan(i, q)
-      if (p == q) { i = q + 1; return s.substring(start, q) }
-      i = p
-      if (s.charAt(p) == '\\') readStringSlow(start)
-      else err("unescaped control character in string")
-    }
-
-    private def readStringSlow(start: Int): String = {
-      val sb = new java.lang.StringBuilder(i - start + 16)
-      sb.append(s, start, i)
-      while (i < n) {
-        val c = s.charAt(i)
-        if (c == '"') { i += 1; return sb.toString }
-        else if (c == '\\') {
-          i += 1
-          if (i >= n) err("unterminated escape")
-          (s.charAt(i): @annotation.switch) match {
-            case '"'  => sb.append('"');  i += 1
-            case '\\' => sb.append('\\'); i += 1
-            case '/'  => sb.append('/');  i += 1
-            case 'b'  => sb.append('\b'); i += 1
-            case 'f'  => sb.append('\f'); i += 1
-            case 'n'  => sb.append('\n'); i += 1
-            case 'r'  => sb.append('\r'); i += 1
-            case 't'  => sb.append('\t'); i += 1
-            case 'u'  =>
-              if (i + 5 > n) err("truncated \\u escape")
-              var cp = 0
-              var j = i + 1
-              while (j < i + 5) {
-                val h = Character.digit(s.charAt(j), 16)
-                if (h < 0) err("bad hex in \\u escape")
-                cp = (cp << 4) | h
-                j += 1
-              }
-              sb.append(cp.toChar)
-              i += 5
-            case _ => err("bad escape")
-          }
-        }
-        else if (c < ' ') err("unescaped control character in string")
-        else { sb.append(c); i += 1 }
-      }
-      err("unterminated string")
-    }
-
-    /** The first position in [from, q) holding '\\' or an unescaped
-      * control char, or q when the span is clean. The quote position `q`
-      * comes from the SIMD `String.indexOf` intrinsic; this vet loop is
-      * branch-free per char so the common clean span costs two compares
-      * per char with no mispredicts. */
-    private def vetSpan(from: Int, q: Int): Int = {
-      var j = from
-      var bad = false
-      while (j < q) {
-        val c = s.charAt(j)
-        bad |= (c == '\\') | (c < ' ')
-        j += 1
-      }
-      if (!bad) q
-      else {
-        var k = from
-        while (s.charAt(k) != '\\' && s.charAt(k) >= ' ') k += 1
-        k
-      }
-    }
-
-    /** Skip a string (opening quote at cursor), validating escapes. */
-    def skipString(): Unit = {
-      i += 1
-      val q = s.indexOf('"', i)
-      if (q < 0) err("unterminated string")
-      val p = vetSpan(i, q)
-      if (p == q) { i = q + 1; return }
-      i = p
-      while (i < n) {
-        val c = s.charAt(i)
-        if (c == '"') { i += 1; return }
-        else if (c == '\\') {
-          i += 1
-          if (i >= n) err("unterminated escape")
-          (s.charAt(i): @annotation.switch) match {
-            case '"' | '\\' | '/' | 'b' | 'f' | 'n' | 'r' | 't' => i += 1
-            case 'u' =>
-              if (i + 5 > n) err("truncated \\u escape")
-              var j = i + 1
-              while (j < i + 5) {
-                if (Character.digit(s.charAt(j), 16) < 0) err("bad hex in \\u escape")
-                j += 1
-              }
-              i += 5
-            case _ => err("bad escape")
-          }
-        }
-        else if (c < ' ') err("unescaped control character in string")
-        else i += 1
-      }
-      err("unterminated string")
-    }
-
-    private def isDigit(c: Char): Boolean = c >= '0' && c <= '9'
-    private def skipDigits(): Unit = { while (i < n && isDigit(s.charAt(i))) i += 1 }
-
-    /** Scan a number token (strict grammar), leaving cursor after it.
-      * Returns true when the token has no '.'/'e' part (surely integral —
-      * the converse is NOT surely fractional: 1.0 and 1e2 are integral). */
-    def scanNumber(): Boolean = {
-      val start = i
-      if (i < n && s.charAt(i) == '-') i += 1
-      if (i >= n) err("malformed number")
-      val c0 = s.charAt(i)
-      if (c0 == '0') i += 1
-      else if (c0 >= '1' && c0 <= '9') { i += 1; skipDigits() }
-      else err("malformed number")
-      var intOnly = true
-      if (i < n && s.charAt(i) == '.') {
-        intOnly = false
-        i += 1
-        if (i >= n || !isDigit(s.charAt(i))) err("malformed number")
-        skipDigits()
-      }
-      if (i < n && { val c = s.charAt(i); c == 'e' || c == 'E' }) {
-        intOnly = false
-        i += 1
-        if (i < n && { val c = s.charAt(i); c == '+' || c == '-' }) i += 1
-        if (i >= n || !isDigit(s.charAt(i))) err("malformed number")
-        var expStart = i
-        skipDigits()
-        // the tree parser rejects unrepresentable magnitudes ("number out
-        // of range", Json.scala parseNumber) — the grammar skip must agree,
-        // or a skipped value would stream as valid where parse throws.
-        // Suspicious shape (an exponent past 9 significant digits) is
-        // vetted through the same BigDecimal construction (rare path).
-        while (expStart < i && s.charAt(expStart) == '0') expStart += 1
-        if (i - expStart > 9) {
-          try { new java.math.BigDecimal(s.substring(start, i)); () }
-          catch { case _: NumberFormatException =>
-            { i = start; err("number out of range") }
-          }
-        }
-      }
-      intOnly
-    }
-
-    /** Parse a number token into JNum (same construction as
-      * JsonValue.Parser.parseNumber: long fast path ≤18 int digits). */
-    def readNumber(): JNum = {
-      val start = i
-      val intOnly = scanNumber()
-      numFromSpan(start, intOnly)
-    }
-
-    /** Materialize the number token already scanned from `start` up to
-      * the cursor (split out of readNumber so callers that learn from
-      * scanNumber() alone that no value is needed can skip this). */
-    def numFromSpan(start: Int, intOnly: Boolean): JNum = {
-      val len = i - start
-      if (intOnly && len <= 18) {
-        var v = 0L
-        var j = if (s.charAt(start) == '-') start + 1 else start
-        while (j < i) { v = v * 10 + (s.charAt(j) - '0'); j += 1 }
-        JNum(BigDecimal(if (s.charAt(start) == '-') -v else v))
-      } else
-        try JNum(BigDecimal(new java.math.BigDecimal(s.substring(start, i))))
-        catch { case _: NumberFormatException =>
-          { i = start; err("number out of range") }
-        }
-    }
-
-    /** Skip one value, grammar-checked (a VALID verdict must imply the
-      * document parses — see class doc). */
-    def skipValue(): Unit = {
-      ws()
-      (peek: @annotation.switch) match {
-        case '"' => skipString()
-        case '{' =>
-          i += 1; ws()
-          if (peek == '}') { i += 1; return }
-          var done = false
-          while (!done) {
-            ws()
-            if (peek != '"') err("expected field name")
-            skipString()
-            ws(); expect(':')
-            skipValue()
-            ws()
-            (readCh(): @annotation.switch) match {
-              case ',' => ()
-              case '}' => done = true
-              case _   => err("expected ',' or '}'")
-            }
-          }
-        case '[' =>
-          i += 1; ws()
-          if (peek == ']') { i += 1; return }
-          var done = false
-          while (!done) {
-            skipValue()
-            ws()
-            (readCh(): @annotation.switch) match {
-              case ',' => ()
-              case ']' => done = true
-              case _   => err("expected ',' or ']'")
-            }
-          }
-        case 't' => word("true")
-        case 'f' => word("false")
-        case 'n' => word("null")
-        case _   => { scanNumber(); () }
       }
     }
   }

@@ -170,10 +170,10 @@ class AuditStreamingSpec extends AnyFunSuite {
 
   test("checkpointed run: units under a path with a space, % and + commit their own counts") {
     val root = tempDir("graft_paths")
-    val tableDir = ordersTable(3, s"$root/sp ace/t%1+x")
+    val tableDir = ordersTable(3, s"""$root/sp ace/t%1+x"q""")
     val plan = Validation.compile(ordersSpec, spark.read.parquet(tableDir).schema)
-    val summary = CheckpointedRun.run(spark, tableDir, plan, tempDir("graft_audit"), "r",
-      Seq("o_orderkey"))
+    val auditDir = tempDir("graft_audit")
+    val summary = CheckpointedRun.run(spark, tableDir, plan, auditDir, "r", Seq("o_orderkey"))
     assert(summary.units.size == 3)
     summary.units.foreach { u =>
       val file = spark.read.parquet(u.unit)
@@ -183,6 +183,16 @@ class AuditStreamingSpec extends AnyFunSuite {
       assert((u.rows, u.invalidRows, u.violations) == expect, s"unit ${u.unit}")
     }
     assert(summary.invalidRows > 0)
+    // the commit records hold the paths escaped: they read back as JSON
+    // and a second run resumes every unit
+    val again = CheckpointedRun.run(spark, tableDir, plan, auditDir, "r", Seq("o_orderkey"))
+    assert(again.resumedUnits == 3)
+    assert(again.units.map(u => (u.rows, u.invalidRows, u.violations)) ==
+      summary.units.map(u => (u.rows, u.invalidRows, u.violations)))
+    val log = CheckpointedRun.auditLog(spark, auditDir, "r")
+    assert(!log.columns.contains("_corrupt_record"), log.columns.mkString(", "))
+    assert(log.count() == 3)
+    assert(log.select("unit").collect().map(_.getString(0)).toSet == summary.units.map(_.unit).toSet)
   }
 
   test("checkpointed run: a table's own unit_id column is checked and kept as a key") {

@@ -3,19 +3,18 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import graft.spec._
 
-/** The streaming cursor (`Streaming.Cur`) re-implements the JSON lexer's
-  * scanning primitives (string vetting, number scanning, skip) that
-  * `JsonValue.Parser` also owns. The whole streaming design rests on
-  * "identical verdicts/trees on both paths" — a grammar fix applied to one
-  * copy and not the other would silently break it (ADVICE r04 #3). This
-  * spec fuzzes raw (mostly malformed) byte strings through both lexers and
-  * pins: parse-accepts ⟺ stream-skip-accepts, byte for byte.
+/** JSON text has one lexer, the cursor `Cur` (spec/Json.scala), with two
+  * ways through a value: `readTree` builds the tree (`JsonValue.parse`),
+  * and `skipValue` only checks the grammar (the streaming validator's
+  * skipped values, `Streaming.grammarOk`). The streaming design rests on
+  * both accepting exactly the same texts: a VALID streaming verdict must
+  * imply the document parses (Streaming.scala header contract). This spec
+  * fuzzes raw (mostly malformed) strings through both ways and pins:
+  * parse-accepts ⟺ stream-skip-accepts, string for string.
   *
-  * The stream side is driven through a permissive prepared schema (`true`
-  * for the root) whose fused pass grammar-skips every value — a VALID
-  * streaming verdict implies the document parses (Streaming.scala header
-  * contract), and a grammar error surfaces as the same IOException the
-  * parser throws. */
+  * The stream side is driven through a permissive prepared schema whose
+  * fused pass grammar-skips every value, and a grammar error surfaces as
+  * the same IOException the tree read throws. */
 class LexerDifferentialSpec extends AnyFunSuite {
 
   // Accept-everything schema compiled onto the streaming lane: one object

@@ -8,7 +8,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * second ANSI setting lets one entry point drift from the others, and
   * turning ANSI mode on must stay a one-file edit. Environment variables
   * are read by entry points only: a variable read deep in the engine is a
-  * second, untested code path that no caller can see. */
+  * second, untested code path that no caller can see. JSON text has one
+  * lexer, `Cur` in `spec/Json.scala`: a second copy of its grammar has to
+  * be kept in step by hand. */
 class SessionPolicySpec extends AnyFunSuite {
   private val banned = Seq("""SparkSession\s*\.\s*builder""".r, """spark\.sql\.ansi\.enabled""".r)
   private val allowed = Set("Sessions.scala", "SessionPolicySpec.scala")
@@ -40,6 +42,16 @@ class SessionPolicySpec extends AnyFunSuite {
     val main = Paths.get("src/main/scala")
     val offenders = sourceFiles(main.toString)
       .filter(f => !entryPoints(main.relativize(f).toString) && matches(f, envReads))
+    assert(offenders.isEmpty, offenders.mkString("\n"))
+  }
+
+  test("only spec/Json.scala lexes JSON text") {
+    val lexerErrors = Seq("\"unterminated string\"", "\"bad escape\"", "\"malformed number\"")
+      .map(m => java.util.regex.Pattern.quote(m).r)
+    val main = Paths.get("src/main/scala")
+    assert(matches(main.resolve("graft/spec/Json.scala"), lexerErrors), "Json.scala must hold the lexer")
+    val offenders = sourceFiles(main.toString)
+      .filter(f => main.relativize(f).toString != "graft/spec/Json.scala" && matches(f, lexerErrors))
     assert(offenders.isEmpty, offenders.mkString("\n"))
   }
 }
