@@ -135,53 +135,18 @@ object Ann {
 
   /** Deduplicated sign-LSH candidate pairs (id_a < id_b), ID-ONLY — the
     * banded exchange and the pair dedup never shuffle embedding payloads.
-    * With a finite `maxBucketSize` the candidate count is hard-bounded by
-    * bands · 2^bits · cap·(cap-1)/2 regardless of input skew. */
+    * The (band, bucket) self-join and its per-bucket cap are
+    * `TextOps.bucketPairs`: with a finite `maxBucketSize` the candidate
+    * count is hard-bounded by bands · 2^bits · cap·(cap-1)/2 regardless of
+    * input skew. */
   def lshCandidatePairs(df: DataFrame, idCol: String, vecCol: String, dim: Int,
                         bits: Int, bands: Int, seed: Long = 42L,
                         maxBucketSize: Int = 1024, dedup: Boolean = true): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val src = df.select(col(idCol).as("id"), col(vecCol).as("v"))
-    val banded = src.select(col("id"),
-      posexplode(graft.functions.vecexprs.sign_lsh_buckets(col("v"), dim, bits, bands, seed))
+    val banded = df.select(col(idCol).as("id"),
+      posexplode(graft.functions.vecexprs.sign_lsh_buckets(col(vecCol), dim, bits, bands, seed))
         .as(Seq("band", "bucket")))
-    val capped =
-      if (maxBucketSize <= 0) {
-        System.err.println("[graft] cosineNearDups: per-(band,bucket) cap is OFF - an " +
-          "over-full bucket makes the self-join quadratic in its size; set a finite " +
-          "maxBucketSize for corpus-scale runs")
-        banded
-      } else {
-        // candidate-volume contract: at most maxBucketSize rows survive per
-        // (band, bucket) ⇒ join work is bounded by bands · 2^bits · cap²/2.
-        // Survivor rank is salted BY BAND, so a row dropped from an over-full
-        // bucket in one band still competes in its other bands — recall decays
-        // gracefully instead of deterministically losing the same rows.
-        val over = banded.groupBy("band", "bucket").count()
-          .where(col("count") > maxBucketSize)
-          .agg(coalesce(sum(col("count") - maxBucketSize), lit(0L)).as("d"),
-            count(lit(1)).as("nb"))
-          .collect()(0)
-        if (over.getLong(0) == 0) {
-          // no bucket over the cap (the common case): the row_number window
-          // would keep every row — skip its shuffle + per-bucket sort; the
-          // pre-count is the proof of zero drops (VERDICT_r05 #3).
-          banded
-        } else {
-          System.err.println(s"[graft] cosineNearDups: per-(band,bucket) cap $maxBucketSize " +
-            s"binding - dropped ${over.getLong(0)} row-band assignments across ${over.getLong(1)} " +
-            "over-full buckets from candidate generation (recall becomes approximate for " +
-            "rows sharing only over-full buckets)")
-          val w = Window.partitionBy(col("band"), col("bucket"))
-            .orderBy(xxhash64(col("id"), col("band"), lit(seed)))
-          banded.withColumn("_rk", row_number().over(w))
-            .where(col("_rk") <= maxBucketSize).drop("_rk")
-        }
-      }
-    val a = capped.alias("a"); val b = capped.alias("b")
-    val pairs = a.join(b, col("a.band") === col("b.band") && col("a.bucket") === col("b.bucket") &&
-        col("a.id") < col("b.id"))
-      .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
+    val pairs = graft.text.TextOps.bucketPairs(banded, Seq("band", "bucket"), maxBucketSize,
+      seed, "cosineNearDups")
     if (dedup) pairs.distinct() else pairs
   }
 

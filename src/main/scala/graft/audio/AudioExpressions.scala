@@ -116,16 +116,6 @@ case class ExpectedTranscript(child: Expression) extends UnaryExpression {
 case class PcmStats(left: Expression, right: Expression) extends BinaryExpression {
   override def dataType: DataType = AudioFns.pcmStatsType
   override def nullable: Boolean = true
-  // The function is pure, but it is declared non-deterministic to stop the
-  // optimizer duplicating the decode: a filter on fields of this struct
-  // gets pushed below the producing projection with the WHOLE expression
-  // inlined once per field reference (guide §4.4) — the clips pipeline
-  // plan carried 4 copies (3 filter conjuncts + the projection), i.e. 4
-  // payload decodes per surviving row. Non-determinism keeps the filter
-  // above the projection, so the decode runs exactly once per row. The
-  // trade (some filters no longer reorder past this expression) is the
-  // right one for a whole-payload decode.
-  override lazy val deterministic: Boolean = false
   override protected def nullSafeEval(bytes: Any, codec: Any): Any =
     AudioFns.pcmStats(bytes.asInstanceOf[Array[Byte]], codec.asInstanceOf[UTF8String])
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
@@ -145,11 +135,14 @@ object expressions {
   def expected_transcript(clipId: Column): Column =
     ColumnBridge.toCol(ExpectedTranscript(ColumnBridge.toExpr(clipId)))
 
-  /** Decode stats of one payload, see [[PcmStats]]. Project it into a
-    * column before using it inside `agg()` or a join condition: the
-    * expression is declared non-deterministic to keep the decode to one
-    * evaluation per row, and Spark rejects non-deterministic expressions
-    * in aggregate functions and join conditions with an AnalysisException. */
+  /** Decode stats of one payload, see [[PcmStats]], pinned with
+    * [[graft.functions.OnceBarrier]]: a filter on fields of the struct
+    * would otherwise be pushed below the producing projection with the
+    * whole decode inlined once per field reference (the clips pipeline
+    * plan carried 4 payload decodes per surviving row). Project it into a
+    * column before using it inside `agg()` or a join condition: Spark
+    * rejects the barrier's non-determinism there with an AnalysisException. */
   def pcm_stats(bytes: Column, codec: Column): Column =
-    ColumnBridge.toCol(PcmStats(ColumnBridge.toExpr(bytes), ColumnBridge.toExpr(codec)))
+    graft.functions.OnceBarrier.once(
+      ColumnBridge.toCol(PcmStats(ColumnBridge.toExpr(bytes), ColumnBridge.toExpr(codec))))
 }

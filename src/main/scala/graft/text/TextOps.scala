@@ -140,45 +140,58 @@ object TextOps {
   def lshBands(signature: Column, rowsPerBand: Int): Column =
     graft.functions.vecexprs.lsh_band_keys(signature, rowsPerBand)
 
-  /** Candidate-volume contract shared by the banded dedup operators (the
-    * `Ann.lshCandidatePairs` pattern, VERDICT_r04 #1/#2): at most `cap`
-    * rows survive per bucket (the grouping of `keyCols`), so the bucket
-    * self-join is hard-bounded by nBuckets · cap·(cap-1)/2 under ANY input
-    * skew. Survivor rank is salted by the full bucket key, so a row
-    * dropped from one over-full bucket still competes in its other
-    * band/chunk buckets — recall decays gracefully. Drops are counted and
-    * logged — no silent caps. `cap <= 0` switches the contract off with a
-    * loud warning (exact small-scale runs only). */
-  private def capBuckets(banded: DataFrame, keyCols: Seq[String], cap: Int,
-                         seed: Long, what: String): DataFrame = {
+  /** Bucket self-join of the banded near-duplicate operators (MinHash and
+    * SimHash here, sign-LSH in `Ann.lshCandidatePairs`). `banded` holds one
+    * row per (id, bucket), the bucket being the grouping of `keyCols`;
+    * every two rows sharing a bucket become a candidate (id_a, id_b) with
+    * id_a < id_b, plus `<c>_a`/`<c>_b` for each `carry` column. A pair
+    * sharing several buckets comes out once per bucket.
+    *
+    * Candidate-volume contract (VERDICT_r04 #1/#2): at most `cap` rows
+    * survive per bucket, so the self-join is hard-bounded by
+    * nBuckets · cap·(cap-1)/2 under ANY input skew. Survivor rank is
+    * salted by the full bucket key, so a row dropped from one over-full
+    * bucket still competes in its other buckets — recall decays
+    * gracefully. Drops are counted and logged — no silent caps. `cap <= 0`
+    * switches the contract off with a loud warning (exact small-scale
+    * runs only). */
+  private[graft] def bucketPairs(banded: DataFrame, keyCols: Seq[String], cap: Int,
+                                 seed: Long, what: String,
+                                 carry: Seq[String] = Nil): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    if (cap <= 0) {
-      System.err.println(s"[graft] $what: per-bucket candidate cap is OFF - an over-full " +
-        "bucket makes the self-join quadratic in its size; set a finite maxBucketSize " +
-        "for corpus-scale runs")
-      banded
-    } else {
-      val over = banded.groupBy(keyCols.map(col): _*).count()
-        .where(col("count") > cap)
-        .agg(coalesce(sum(col("count") - cap), lit(0L)).as("d"), count(lit(1)).as("nb"))
-        .collect()(0)
-      if (over.getLong(0) == 0) {
-        // no bucket exceeds the cap (the common case): the row_number
-        // window would be an identity — skip its shuffle + per-bucket sort
-        // entirely; the pre-count doubles as the proof of zero drops
-        // (VERDICT_r05 "What's wrong" #3).
+    val capped =
+      if (cap <= 0) {
+        System.err.println(s"[graft] $what: per-bucket candidate cap is OFF - an over-full " +
+          "bucket makes the self-join quadratic in its size; set a finite maxBucketSize " +
+          "for corpus-scale runs")
         banded
       } else {
-        System.err.println(s"[graft] $what: per-bucket cap $cap binding - dropped " +
-          s"${over.getLong(0)} row-bucket assignments across ${over.getLong(1)} over-full " +
-          "buckets from candidate generation (recall becomes approximate for rows " +
-          "sharing only over-full buckets)")
-        val w = Window.partitionBy(keyCols.map(col): _*)
-          .orderBy(xxhash64(col("id") +: keyCols.map(col) :+ lit(seed): _*))
-        banded.withColumn("_rk", row_number().over(w))
-          .where(col("_rk") <= cap).drop("_rk")
+        val over = banded.groupBy(keyCols.map(col): _*).count()
+          .where(col("count") > cap)
+          .agg(coalesce(sum(col("count") - cap), lit(0L)).as("d"), count(lit(1)).as("nb"))
+          .collect()(0)
+        if (over.getLong(0) == 0) {
+          // no bucket exceeds the cap (the common case): the row_number
+          // window would be an identity — skip its shuffle + per-bucket
+          // sort entirely; the pre-count doubles as the proof of zero drops
+          // (VERDICT_r05 "What's wrong" #3).
+          banded
+        } else {
+          System.err.println(s"[graft] $what: per-bucket cap $cap binding - dropped " +
+            s"${over.getLong(0)} row-bucket assignments across ${over.getLong(1)} over-full " +
+            "buckets from candidate generation (recall becomes approximate for rows " +
+            "sharing only over-full buckets)")
+          val w = Window.partitionBy(keyCols.map(col): _*)
+            .orderBy(xxhash64(col("id") +: keyCols.map(col) :+ lit(seed): _*))
+          banded.withColumn("_rk", row_number().over(w))
+            .where(col("_rk") <= cap).drop("_rk")
+        }
       }
-    }
+    val a = capped.alias("a"); val b = capped.alias("b")
+    val sameBucket = keyCols.map(k => col(s"a.$k") === col(s"b.$k")).reduce(_ && _)
+    a.join(b, sameBucket && col("a.id") < col("b.id"))
+      .select(Seq(col("a.id").as("id_a"), col("b.id").as("id_b")) ++
+        carry.flatMap(c => Seq(col(s"a.$c").as(s"${c}_a"), col(s"b.$c").as(s"${c}_b"))): _*)
   }
 
   /** Re-expand representative near-dup pairs to member pairs after an
@@ -224,6 +237,47 @@ object TextOps {
     try result.localCheckpoint(true)
     finally cached.foreach(_.unpersist(false))
 
+  /** Adaptive exact-duplicate pre-collapse shared by the banded text
+    * operators. `base` is (id, text); `doc` computes the per-document
+    * value the operator bands (shingles / simhash) and `keep` filters the
+    * documents that enter banding; `pairs` bands and verifies documents
+    * (id, doc value) into (id_a, id_b, `valueCol`).
+    *
+    * The pre-collapse (an m-clique costs O(m) via its representative) pays
+    * a FULL-TEXT shuffle in the groupBy; whether the corpus has meaningful
+    * duplication is decided first with a map-side HLL aggregate (no
+    * shuffle). Low-duplication corpora skip straight to banding — the
+    * per-bucket cap bounds candidates either way. The decision only needs
+    * SOME content fingerprint's distinct count, so it hashes with xxhash64
+    * (fingerprint64); the md5 fingerprint is only computed when the
+    * collapse path actually groups on it (where its collision resistance
+    * matters). The banded documents are persisted as a materialization
+    * boundary: without it Catalyst inlines the whole per-document pipeline
+    * into the post-join verify filter and every candidate pair recomputes
+    * it. */
+  private def collapsedNearDups(base: DataFrame, doc: Column, keep: Column,
+                                pairs: DataFrame => DataFrame, valueCol: String,
+                                selfValue: Column, expand: Boolean): DataFrame = {
+    val st = base.agg(count(lit(1)).as("n"),
+      approx_count_distinct(fingerprint64(col("text"))).as("d")).head()
+    if (st.getLong(0) - st.getLong(1) <= 0.02 * st.getLong(0)) {
+      val docs = base.select(col("id"), doc).where(keep).persist()
+      materializeAndRelease(pairs(docs), docs)
+    } else {
+      val keyed = base.select(col("id"), col("text"), fingerprint(col("text")).as("fp"))
+      // members is narrow (id, fp) — the only thing the expansion keeps
+      val members = keyed.select("id", "fp").persist()
+      val reps = keyed.groupBy("fp")
+        .agg(min("id").as("id"), min_by(col("text"), col("id")).as("text"))
+      val docs = reps.select(col("fp"), col("id"), doc).where(keep).persist()
+      // groups that entered banding (documents `keep` drops emit no pairs,
+      // exactly as the uncollapsed operator filters them out)
+      val groups = docs.select(col("fp"), col("id").as("rep"))
+      val out = expandDupPairs(pairs(docs), members, groups, valueCol, selfValue, expand)
+      materializeAndRelease(out, members, docs)
+    }
+  }
+
   /** Candidate near-duplicate pairs via MinHash LSH, verified with exact
     * Jaccard over shingle sets. The self-join is per (band, band_hash)
     * bucket — shuffle on the band hash, never a full cross join. Returns
@@ -252,20 +306,13 @@ object TextOps {
     // parallelism for few-split inputs (no-op at scale — Spread scaladoc)
     val base = graft.functions.Spread
       .toCores(df.select(col(idCol).as("id"), col(textCol).as("text")))
-    val keyed = base.select(col("id"), col("text"),
-      fingerprint(col("text")).as("fp"))
-    // candidate generation from shingled docs: shuffles only (id, band,
-    // band_hash) — the fat shingle arrays are joined back ONLY for the
+    // candidate generation from shingled docs: shuffles only (id,
+    // band_key) — the fat shingle arrays are joined back ONLY for the
     // deduped candidates
     def verifiedPairs(docs: DataFrame): DataFrame = {
       val banded = docs
         .select(col("id"), explode(lshBands(minhashSignature(col("sh"), k, seed), rowsPerBand)).as("band_key"))
-      val capped = capBuckets(banded, Seq("band_key"), maxBucketSize, seed, "minhashNearDups")
-      val a = capped.alias("a")
-      val b = capped.alias("b")
-      val pairs = a.join(b,
-          col("a.band_key") === col("b.band_key") && col("a.id") < col("b.id"))
-        .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
+      val pairs = bucketPairs(banded, Seq("band_key"), maxBucketSize, seed, "minhashNearDups")
         .dropDuplicates("id_a", "id_b")
       val da = docs.select(col("id").as("id_a"), col("sh").as("sh_a"))
       val db = docs.select(col("id").as("id_b"), col("sh").as("sh_b"))
@@ -274,42 +321,8 @@ object TextOps {
         .where(col("jaccard") >= threshold)
         .select(col("id_a"), col("id_b"), round(col("jaccard"), 4).as("jaccard"))
     }
-    // The exact-duplicate pre-collapse (an m-clique costs O(m) via its
-    // representative) pays a FULL-TEXT shuffle in the groupBy; whether the
-    // corpus has meaningful duplication is decided first with a map-side
-    // HLL aggregate (no shuffle). Low-duplication corpora skip straight
-    // to banding — the per-bucket cap bounds candidates either way.
-    // The decision only needs SOME content fingerprint's distinct count,
-    // so it hashes with xxhash64 (fingerprint64) instead of md5 — the
-    // md5 fingerprint is only computed when the collapse path actually
-    // groups on it (where its collision resistance matters).
-    val st = base.agg(count(lit(1)).as("n"),
-      approx_count_distinct(fingerprint64(col("text"))).as("d")).head()
-    val collapse = st.getLong(0) - st.getLong(1) > 0.02 * st.getLong(0)
-    if (!collapse) {
-      val docs = keyed.select(col("id"), shingles(col("text"), n).as("sh"))
-        .where(size(col("sh")) > 0)
-        .persist()
-      materializeAndRelease(verifiedPairs(docs), docs)
-    } else {
-      // members is narrow (id, fp) — the only thing the expansion keeps
-      val members = keyed.select("id", "fp").persist()
-      val reps = keyed.groupBy("fp")
-        .agg(min("id").as("id"), min_by(col("text"), col("id")).as("text"))
-      // persist = a materialization boundary: without it Catalyst inlines
-      // the whole shingle pipeline into the post-join jaccard filter and
-      // every candidate pair recomputes it
-      val docs = reps.select(col("fp"), col("id"), shingles(col("text"), n).as("sh"))
-        .where(size(col("sh")) > 0)
-        .persist()
-      val repPairs = verifiedPairs(docs)
-      // groups that entered banding (empty-shingle groups emit no pairs,
-      // exactly as the uncollapsed operator filtered those docs out)
-      val groups = docs.select(col("fp"), col("id").as("rep"))
-      val out = expandDupPairs(repPairs, members, groups, "jaccard",
-        lit(1.0), expandDups)
-      materializeAndRelease(out, members, docs)
-    }
+    collapsedNearDups(base, shingles(col("text"), n).as("sh"), size(col("sh")) > 0,
+      verifiedPairs, "jaccard", lit(1.0), expandDups)
   }
 
   /** Exact n-gram Jaccard similarity between all pairs sharing at least
@@ -431,8 +444,6 @@ object TextOps {
     // tokenize+simhash kernel is ~10x cheaper than shingling and the A/B
     // measured the extra exchange as a net loss (1.84s → 2.21s at sf0.1)
     val base = df.select(col(idCol).as("id"), col(textCol).as("text"))
-    val keyed = base.select(col("id"), col("text"),
-      fingerprint(col("text")).as("fp"))
     def verifiedPairs(withH: DataFrame): DataFrame = {
       // nearly-equal bit ranges [i*64/n, (i+1)*64/n)
       val ranges = (0 until nChunks).map { i =>
@@ -446,38 +457,13 @@ object TextOps {
             shiftright(col("h"), lo).bitwiseAND(mask).as("ck"))
         }: _*)).as("c"))
         .select(col("id"), col("h"), col("c.chunk").as("chunk"), col("c.ck").as("ck"))
-      val capped = capBuckets(chunks, Seq("chunk", "ck"), maxBucketSize, seed, "simhashNearDups")
-      val a = capped.alias("a"); val b = capped.alias("b")
-      a.join(b, col("a.chunk") === col("b.chunk") && col("a.ck") === col("b.ck") &&
-          col("a.id") < col("b.id"))
-        .select(col("a.id").as("id_a"), col("b.id").as("id_b"),
-          hamming64(col("a.h"), col("b.h")).as("hamming"))
+      bucketPairs(chunks, Seq("chunk", "ck"), maxBucketSize, seed, "simhashNearDups",
+          carry = Seq("h"))
+        .select(col("id_a"), col("id_b"), hamming64(col("h_a"), col("h_b")).as("hamming"))
         .dropDuplicates("id_a", "id_b")
         .where(col("hamming") <= maxHamming)
     }
-    // adaptive exact-duplicate pre-collapse — see minhashNearDups: the
-    // duplication check is a map-side HLL aggregate over the cheap
-    // xxhash64 fingerprint (md5 is only computed when the collapse path
-    // groups on it), and low-duplication corpora skip the full-text
-    // groupBy shuffle (the per-bucket cap bounds candidates either way)
-    val st = base.agg(count(lit(1)).as("n"),
-      approx_count_distinct(fingerprint64(col("text"))).as("d")).head()
-    val collapse = st.getLong(0) - st.getLong(1) > 0.02 * st.getLong(0)
-    if (!collapse) {
-      // materialize: keeps the tokenize+simhash pipeline out of the
-      // per-candidate-pair hamming filter (see minhashNearDups)
-      val withH = keyed.select(col("id"), simhash(col("text")).as("h")).persist()
-      materializeAndRelease(verifiedPairs(withH), withH)
-    } else {
-      val members = keyed.select("id", "fp").persist()
-      val reps = keyed.groupBy("fp")
-        .agg(min("id").as("id"), min_by(col("text"), col("id")).as("text"))
-      val withH = reps.select(col("fp"), col("id"), simhash(col("text")).as("h")).persist()
-      val repPairs = verifiedPairs(withH)
-      val groups = withH.select(col("fp"), col("id").as("rep"))
-      val out = expandDupPairs(repPairs, members, groups, "hamming",
-        lit(0), expandDups)
-      materializeAndRelease(out, members, withH)
-    }
+    collapsedNearDups(base, simhash(col("text")).as("h"), lit(true),
+      verifiedPairs, "hamming", lit(0), expandDups)
   }
 }

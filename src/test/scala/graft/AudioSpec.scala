@@ -101,6 +101,18 @@ class AudioSpec extends AnyFunSuite {
     assert(rows(4L).isEmpty) // undecodable → null struct, isNull propagated
   }
 
+  test("pcm_stats decodes once per row under a filter on its fields") {
+    val clips = ClipsGen.generate(spark, 20, partitions = 1, corruptionRate = 0.0)
+    val df = clips.toDF()
+      .select(col("clip_id"), expressions.pcm_stats(col("bytes"), col("codec")).as("st"))
+      .where(col("st.rms_dbfs") > -60.0 && col("st.clip_frac") < 0.01)
+    // unpinned, the filter is pushed below the projection with the decode
+    // inlined once per field reference
+    val optimized = df.queryExecution.optimizedPlan.toString
+    assert("pcmstats\\(".r.findAllMatchIn(optimized).size == 1, optimized)
+    assert(df.count() == 20) // clean speech-like clips: audible, unclipped
+  }
+
   test("pcm_stats agrees across codecs for the generator's clean clips") {
     val clips = ClipsGen.generate(spark, 30, partitions = 1, corruptionRate = 0.0)
     val stats = clips.toDF()

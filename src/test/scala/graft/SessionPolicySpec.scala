@@ -10,7 +10,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * are read by entry points only: a variable read deep in the engine is a
   * second, untested code path that no caller can see. JSON text has one
   * lexer, `Cur` in `spec/Json.scala`: a second copy of its grammar has to
-  * be kept in step by hand. */
+  * be kept in step by hand. The banded near-duplicate operators share one
+  * per-bucket candidate cap, `TextOps.bucketPairs`: two copies of it have
+  * already drifted apart once. */
 class SessionPolicySpec extends AnyFunSuite {
   private val banned = Seq("""SparkSession\s*\.\s*builder""".r, """spark\.sql\.ansi\.enabled""".r)
   private val allowed = Set("Sessions.scala", "SessionPolicySpec.scala")
@@ -52,6 +54,16 @@ class SessionPolicySpec extends AnyFunSuite {
     assert(matches(main.resolve("graft/spec/Json.scala"), lexerErrors), "Json.scala must hold the lexer")
     val offenders = sourceFiles(main.toString)
       .filter(f => main.relativize(f).toString != "graft/spec/Json.scala" && matches(f, lexerErrors))
+    assert(offenders.isEmpty, offenders.mkString("\n"))
+  }
+
+  test("only text/TextOps.scala caps LSH buckets") {
+    val capLogs = Seq("candidate cap is OFF", "binding - dropped")
+      .map(m => java.util.regex.Pattern.quote(m).r)
+    val main = Paths.get("src/main/scala")
+    assert(matches(main.resolve("graft/text/TextOps.scala"), capLogs), "TextOps.scala must hold the cap")
+    val offenders = sourceFiles(main.toString)
+      .filter(f => main.relativize(f).toString != "graft/text/TextOps.scala" && matches(f, capLogs))
     assert(offenders.isEmpty, offenders.mkString("\n"))
   }
 }

@@ -171,6 +171,26 @@ class TextOpsSpec extends AnyFunSuite {
     assert(stars.length == 99 && stars.forall(r => r.getLong(0) == 1L && r.getInt(2) == 0))
   }
 
+  test("binding bucket cap over distinct near-identical docs keeps an exact subset") {
+    // no two docs share their normalized text, so the pre-collapse cannot
+    // absorb the skew: the near-identical docs crowd the same buckets and
+    // the cap itself has to bind
+    val words = (1 to 60).map(i => s"w$i")
+    val df = (1 to 30).map(i => Doc(i.toLong, words.updated(2 * i - 1, s"x$i").mkString(" "))).toDF()
+    def pairs(out: org.apache.spark.sql.DataFrame): Map[(Long, Long), Any] =
+      out.collect().map(r => (r.getLong(0), r.getLong(1)) -> r.get(2)).toMap
+    def checkSubset(full: Map[(Long, Long), Any], capped: Map[(Long, Long), Any]): Unit = {
+      assert(capped.nonEmpty && capped.size < full.size, s"${capped.size} of ${full.size}")
+      assert(capped.forall { case (p, v) => full.get(p).contains(v) })
+    }
+    def minhash(cap: Int) = pairs(TextOps.minhashNearDups(df, "id", "text", n = 3, k = 64,
+      rowsPerBand = 4, threshold = 0.5, maxBucketSize = cap))
+    checkSubset(minhash(0), minhash(4))
+    def simhash(cap: Int) = pairs(TextOps.simhashNearDups(df, "id", "text", maxHamming = 6,
+      nChunks = 8, maxBucketSize = cap))
+    checkSubset(simhash(0), simhash(4))
+  }
+
   test("langId picks marker language; und without markers") {
     val df = Seq(
       Doc(1, "the cat and the dog was in that house"),
