@@ -11,23 +11,48 @@ import graft.table.TableChecks
   * Prints ONE JSON line. */
 object Bench {
 
-  /** Where the clips fixture for (generator version, n, partitions) lives:
-    * a fixture written by an older generator is never reused. */
+  /** Where a bench fixture lives, keyed by everything that decides its
+    * content and its file count: a fixture written by another generator,
+    * from another resource or at another partition count is never reused. */
+  private def fixturePath(name: String, version: String, n: Long, partitions: Int): String =
+    s"/tmp/graft_bench/${name}_v${version}_n${n}_p$partitions"
+
   private def clipsFixturePath(n: Long, partitions: Int): String =
-    s"/tmp/graft_bench/clips_v${ClipsGen.Version}_n${n}_p$partitions"
+    fixturePath("clips", ClipsGen.Version.toString, n, partitions)
 
   private def fixtureExists(path: String): Boolean =
     new java.io.File(s"$path/_SUCCESS").exists()
 
+  /** The one fixture cache: `write` fills `path` once, and later calls
+    * reuse it while its `_SUCCESS` marker stands. */
+  private def cachedFixture(path: String)(write: String => Unit): String = {
+    if (!fixtureExists(path)) write(path)
+    path
+  }
+
   /** Clips parquet fixture (generated once per (n, seed), reused). The
     * benchmark then measures VALIDATION cost from parquet, not synthesis. */
-  def clipsFixture(spark: SparkSession, n: Long, partitions: Int): String = {
-    val path = clipsFixturePath(n, partitions)
-    if (!fixtureExists(path)) {
+  def clipsFixture(spark: SparkSession, n: Long, partitions: Int): String =
+    cachedFixture(clipsFixturePath(n, partitions)) { path =>
       ClipsGen.generate(spark, n, partitions, corruptionRate = 0.01)
         .write.mode("overwrite").parquet(path)
     }
-    path
+
+  /** `n` row-unique copies of a vendored bench document, one per row in
+    * column `doc`: `marker` becomes `prefix` + the row id. The fixture's
+    * version is a digest of the document. */
+  private def documentFixture(spark: SparkSession, name: String, resource: String,
+                              marker: String, prefix: String,
+                              n: Long, partitions: Int): String = {
+    val bytes = getClass.getResourceAsStream(resource).readAllBytes()
+    val digest = java.security.MessageDigest.getInstance("SHA-256").digest(bytes)
+      .take(6).map(b => f"${b & 0xff}%02x").mkString
+    cachedFixture(fixturePath(name, digest, n, partitions)) { path =>
+      spark.range(0, n, 1, partitions)
+        .select(regexp_replace(lit(new String(bytes, "UTF-8")), lit(marker),
+          concat(lit(prefix), col("id"))).as("doc"))
+        .write.mode("overwrite").parquet(path)
+    }
   }
 
   /** The full clips constraint suite, forced end-to-end: row-level scalar +
@@ -142,18 +167,9 @@ object Bench {
     * row-unique) validated against the recursive `#/definitions` schema
     * via the prepared-interpreter kernel — the path a user takes for
     * dynamic JSON columns. */
-  def recursiveFixture(spark: SparkSession, n: Long, partitions: Int): String = {
-    val path = s"/tmp/graft_bench/recursive_n$n"
-    if (!new java.io.File(s"$path/_SUCCESS").exists()) {
-      val instance = new String(
-        getClass.getResourceAsStream("/bench/recursive_instance.json").readAllBytes(), "UTF-8")
-      spark.range(0, n, 1, partitions)
-        .select(regexp_replace(lit(instance), lit("term1"),
-          concat(lit("term"), col("id"))).as("doc"))
-        .write.mode("overwrite").parquet(path)
-    }
-    path
-  }
+  def recursiveFixture(spark: SparkSession, n: Long, partitions: Int): String =
+    documentFixture(spark, "recursive", "/bench/recursive_instance.json",
+      "term1", "term", n, partitions)
 
   def validateRecursive(spark: SparkSession, path: String): Long = {
     val schema = new String(
@@ -168,18 +184,9 @@ object Bench {
     * `crates/benchmark/data/citm_catalog.json`) mirrored at table scale:
     * n row-unique copies validated through the fused streaming kernel —
     * the wide NON-recursive shape complement to the Recursive mirror. */
-  def citmFixture(spark: SparkSession, n: Long, partitions: Int): String = {
-    val path = s"/tmp/graft_bench/citm_n$n"
-    if (!new java.io.File(s"$path/_SUCCESS").exists()) {
-      val instance = new String(
-        getClass.getResourceAsStream("/bench/citm_catalog.json").readAllBytes(), "UTF-8")
-      spark.range(0, n, 1, partitions)
-        .select(regexp_replace(lit(instance), lit("Salle Pleyel"),
-          concat(lit("Salle "), col("id"))).as("doc"))
-        .write.mode("overwrite").parquet(path)
-    }
-    path
-  }
+  def citmFixture(spark: SparkSession, n: Long, partitions: Int): String =
+    documentFixture(spark, "citm", "/bench/citm_catalog.json",
+      "Salle Pleyel", "Salle ", n, partitions)
 
   def validateCitm(spark: SparkSession, path: String): Long = {
     val schema = new String(

@@ -15,7 +15,6 @@ import graft.spec._
   *   graft.cli.Main validate <table.parquet> <spec.json> [outDir] [keyCol]
   *   graft.cli.Main evaluate <table.parquet> <spec.json> <flag|list|hierarchical> [n]
   *   graft.cli.Main check <spec.json> <instance.json> [instance2.json ...]
-  *   graft.cli.Main canonicalize <spec.json>
   *   graft.cli.Main dereference  <spec.json>
   *   graft.cli.Main bundle       <spec.json> <uri=doc.json> [uri=doc.json ...]
   *   graft.cli.Main meta         <spec.json>
@@ -29,7 +28,7 @@ object Main {
     graft.Sessions.create(graft.Sessions.defaultCores, sys.env.get("SPARK_MASTER"))
 
   def main(args: Array[String]): Unit = {
-    val specVerbs = Set("canonicalize", "dereference", "bundle", "meta", "check")
+    val specVerbs = Set("dereference", "bundle", "meta", "check")
     val tableVerbs = Set("validate", "evaluate")
     try {
       args.headOption match {
@@ -113,8 +112,6 @@ object Main {
           }
         }
         sys.exit(if (anyInvalid) 1 else 0)
-      case "canonicalize" =>
-        println(JsonValue.render(Spec.toJson(Canonical.canonicalize(Spec.parse(doc)))))
       case "dereference" =>
         println(JsonValue.render(Spec.toJson(Bundler.dereference(Spec.parse(doc)))))
       case "bundle" =>

@@ -54,7 +54,7 @@ object Bundler {
           if (uriPart.nonEmpty && reg.resolve(r, base).isEmpty)
             out += Registry.resolveUri(base.uri, uriPart)
         }
-        (Canonical.subschemas(o) ++ o.contentSchema).foreach(walk)
+        (Spec.subschemas(o) ++ o.contentSchema).foreach(walk)
       case _ => ()
     }
     walk(root)

@@ -138,7 +138,7 @@ object Registry {
             if (!dynAnchors.contains(a)) dynAnchors(a) = o
             if (!anchors.contains(a)) anchors(a) = o
           }
-          Canonical.subschemas(o).foreach(walk(_, resUri, anchors, dynAnchors, members))
+          Spec.subschemas(o).foreach(walk(_, resUri, anchors, dynAnchors, members))
           o.contentSchema.foreach(walk(_, resUri, anchors, dynAnchors, members))
         }
       case _ => ()
@@ -153,7 +153,7 @@ object Registry {
           members += o
           o.anchor.foreach(a => anchors(a) = o)
           o.dynamicAnchor.foreach { a => dynAnchors(a) = o; anchors(a) = o }
-          Canonical.subschemas(o).foreach(walk(_, uri, anchors, dynAnchors, members))
+          Spec.subschemas(o).foreach(walk(_, uri, anchors, dynAnchors, members))
           o.contentSchema.foreach(walk(_, uri, anchors, dynAnchors, members))
         case _ => ()
       }

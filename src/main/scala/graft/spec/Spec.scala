@@ -91,7 +91,14 @@ object Spec {
     @transient lazy val propertyNameSet: Set[String] = properties.map(_._1).toSet
   }
 
-  val empty: Obj = Obj()
+  /** All direct subschemas of an Obj (applicators + combinators + defs). */
+  def subschemas(o: Obj): Vector[Spec] =
+    o.properties.map(_._2) ++ o.patternProperties.map(_._2) ++
+      o.additionalProperties ++ o.propertyNames ++
+      o.dependentSchemas.map(_._2) ++ o.items ++ o.prefixItems ++
+      o.contains ++ o.allOf ++ o.anyOf ++ o.oneOf ++ o.not ++
+      o.unevaluatedProperties ++ o.unevaluatedItems ++
+      o.ifSpec ++ o.thenSpec ++ o.elseSpec ++ o.defs.values
 
   /** Parse a JSON schema document into a Spec.
     * Mirrors compile dispatch (`compiler.rs:1042-1126`); unknown keywords
@@ -294,7 +301,7 @@ object Spec {
     JsonType.fromName(name).getOrElse(throw new SpecError(s"unknown type: $name"))
 
   /** Render a Spec back to its JSON document form (inverse of [[parse]]) —
-    * the output surface for `canonicalize`/`dereference`/`bundle` verbs
+    * the output surface for the `dereference`/`bundle` verbs
     * (the reference returns serde_json::Value from those). */
   def toJson(s: Spec): JsonValue = s match {
     case Accept => JBool(true)

@@ -33,7 +33,7 @@ object Components {
   def connectedComponents(pairs: DataFrame, aCol: String = "id_a",
                           bCol: String = "id_b", maxIter: Int = 25,
                           localThreshold: Long = 1L << 20): DataFrame = {
-    // Canonical undirected edges (u < v), deduped BEFORE symmetrizing:
+    // Oriented undirected edges (u < v), deduped BEFORE symmetrizing:
     // the old form unioned both orientations first and distinct'd 2×E
     // rows — deduping the canonical orientation shuffles half the bytes
     // for the identical edge set, and the small-graph path collects half

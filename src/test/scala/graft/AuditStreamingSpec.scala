@@ -2,11 +2,9 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import graft.TestSpark.jobsDuring
 import graft.audit.CheckpointedRun
 import graft.run.Validation
-import graft.streaming.StreamingValidation
 
 class AuditStreamingSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -224,120 +222,5 @@ class AuditStreamingSpec extends AnyFunSuite {
     }
     assert(e.getMessage.contains("_graft_unit"))
     assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(taggedAudit, "violations")))
-  }
-
-  // readStream needs a directory source
-  lazy val eventsDir: String = {
-    val d = java.nio.file.Files.createTempDirectory("graft_events").toString
-    spark.read.parquet("/root/testdata/sf0.001/events.parquet")
-      .write.mode("overwrite").parquet(d)
-    d
-  }
-
-  test("streaming validation: windowed verdicts over the events stream") {
-    val schema = spark.read.parquet("/root/testdata/sf0.001/events.parquet").schema
-    val evSpec = """{
-      "properties": {
-        "value": {"minimum": 0, "maximum": 400},
-        "event_type": {"enum": ["click", "view", "purchase", "signup", "error"]}
-      }}"""
-    val stream = spark.readStream.schema(schema).parquet(eventsDir)
-    val plan = Validation.compile(evSpec, schema)
-    val verdicts = StreamingValidation.windowedVerdicts(stream, plan, "ts", "1 hour")
-    val q = verdicts.writeStream.outputMode("complete")
-      .format("memory").queryName("verdicts")
-      .trigger(Trigger.AvailableNow()).start()
-    q.processAllAvailable(); q.stop()
-    val out = spark.sql("select * from verdicts")
-    val batch = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
-    val expectedInvalid = batch.where(col("value") > 400).count()
-    assert(out.agg(sum("rows")).collect()(0).getLong(0) == batch.count())
-    assert(out.agg(sum("invalid_rows")).collect()(0).getLong(0) == expectedInvalid)
-    assert(out.count() > 1) // multiple hourly windows
-  }
-
-  test("windowed drift stream matches the batch PSI/KS math per window") {
-    import spark.implicits._
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    implicit val sq = spark.sqlContext
-    // two hourly windows: the first mirrors the baseline (low PSI), the
-    // second is shifted hard to the top bucket (high PSI)
-    val t0 = java.sql.Timestamp.valueOf("2026-01-01 10:00:00")
-    val t1 = java.sql.Timestamp.valueOf("2026-01-01 11:00:00")
-    val w1 = (1 to 40).map(i => (t0, (i % 10).toDouble))          // uniform 0..9
-    val w2 = (1 to 40).map(_ => (t1, 9.5))                        // all in top bucket
-    val baseline = (0L until 10L).map(_ -> 4L).toMap              // uniform baseline
-    val input = MemoryStream[(java.sql.Timestamp, Double)]
-    val stream = input.toDF().toDF("ts", "v")
-    val drift = StreamingValidation.windowedDrift(stream, "ts", "v",
-      lo = 0.0, hi = 10.0, buckets = 10, baseline = baseline,
-      windowDur = "1 hour", psiMax = 0.2)
-    val q = drift.writeStream.outputMode("complete")
-      .format("memory").queryName("drift").start()
-    try {
-      input.addData(w1 ++ w2: _*)
-      q.processAllAvailable()
-      val out = spark.sql("select * from drift").collect()
-        .map(r => (r.getStruct(0).getTimestamp(0), r.getLong(1), r.getDouble(2),
-          r.getDouble(3), r.getBoolean(4))).sortBy(_._1.getTime)
-      assert(out.length == 2)
-      val (_, rows1, psi1, ks1, pass1) = out(0)
-      val (_, rows2, psi2, _, pass2) = out(1)
-      assert(rows1 == 40 && rows2 == 40)
-      // window 1 ≡ baseline distribution → PSI ~ 0, pass
-      assert(psi1 < 0.01 && pass1, s"psi1=$psi1")
-      assert(ks1 < 0.01)
-      // window 2: everything in one bucket → large PSI, fail
-      assert(psi2 > 1.0 && !pass2, s"psi2=$psi2")
-      // cross-check the batch math on window 2's histogram
-      val batchPsi = graft.table.TableChecks.psi(Map(9L -> 40L), baseline)
-      assert(math.abs(psi2 - batchPsi) < 1e-4, s"stream=$psi2 batch=$batchPsi")
-    } finally q.stop()
-  }
-
-  test("stateful per-key verdicts accumulate across micro-batches (mapGroupsWithState)") {
-    import spark.implicits._
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("user", org.apache.spark.sql.types.StringType),
-      org.apache.spark.sql.types.StructField("value", org.apache.spark.sql.types.IntegerType)))
-    val plan = Validation.compile("""{"properties":{"value":{"maximum":10}}}""", schema)
-    implicit val sq = spark.sqlContext
-    val input = MemoryStream[(String, Int)]
-    val stream = input.toDF().toDF("user", "value")
-    val verdicts = StreamingValidation.statefulKeyVerdicts(stream, plan, "user", alertThreshold = 2)
-    val q = verdicts.writeStream.outputMode("update")
-      .format("memory").queryName("keyverdicts").start()
-    try {
-      // batch 1: u1 gets 2 violations (no alert yet), u2 clean
-      input.addData(("u1", 99), ("u1", 50), ("u2", 1))
-      q.processAllAvailable()
-      // batch 2: u1's third violation crosses the threshold → alert
-      input.addData(("u1", 77), ("u2", 2))
-      q.processAllAvailable()
-      val out = spark.sql("select * from keyverdicts").collect()
-        .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getBoolean(3)))
-      // last emission per key reflects CUMULATIVE state across batches
-      val lastU1 = out.filter(_._1 == "u1").maxBy(_._2)
-      assert(lastU1 == ("u1", 3L, 3L, true), out.mkString(","))
-      val lastU2 = out.filter(_._1 == "u2").maxBy(_._2)
-      assert(lastU2 == ("u2", 2L, 0L, false), out.mkString(","))
-      // batch-1 emission for u1 must NOT have alerted (2 <= threshold)
-      assert(out.contains(("u1", 2L, 2L, false)), out.mkString(","))
-    } finally q.stop()
-  }
-
-  test("streaming violation rows are stateless append") {
-    val schema = spark.read.parquet("/root/testdata/sf0.001/events.parquet").schema
-    val stream = spark.readStream.schema(schema).parquet(eventsDir)
-    val plan = Validation.compile("""{"properties":{"value":{"maximum":100}}}""", schema)
-    val q = StreamingValidation.violationStream(stream, plan, Seq("event_id"))
-      .writeStream.outputMode("append").format("memory").queryName("vio")
-      .trigger(Trigger.AvailableNow()).start()
-    q.processAllAvailable(); q.stop()
-    val got = spark.sql("select count(*) from vio").collect()(0).getLong(0)
-    val expected = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
-      .where(col("value") > 100).count()
-    assert(got == expected && got > 0)
   }
 }

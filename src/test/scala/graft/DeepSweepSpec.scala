@@ -1,7 +1,9 @@
 package graft
 
-// One-off deep equivalence sweep (not part of the default gate — run with
-// testOnly). Kept in the tree so future rounds can re-run it cheaply.
+// Deep engine == interpreter sweep over 2,000 generated (spec, instance)
+// pairs. It is part of the default gate: `testOnly *` runs it, and the
+// build excludes no tag. PropertySpec covers the same generators with only
+// 120 engine samples.
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.Tag
 import org.scalacheck.{Gen, rng}
@@ -12,7 +14,7 @@ object DeepSweep extends Tag("graft.DeepSweep")
 class DeepSweepSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
 
-  test("2000-sample engine/interp/canonical equivalence sweep", DeepSweep) {
+  test("2000-sample engine/interp equivalence sweep", DeepSweep) {
     val p = new PropertySpec
     var seed = rng.Seed(777000111L)
     var checked = 0
@@ -22,16 +24,13 @@ class DeepSweepSpec extends AnyFunSuite {
       val value = p.genValue.pureApply(Gen.Parameters.default, seed); seed = seed.next
       val spec = Spec.parse(specJson)
       val want = Interp.isValid(spec, value)
-      val cWant = Interp.isValid(Canonical.canonicalize(spec), value)
-      if (want != cWant)
-        failures += s"CANON ${JsonValue.render(specJson)} on ${JsonValue.render(value)}: $want vs $cWant"
       SuiteHarness.buildAndCompile(spark, spec, value).foreach { got =>
         checked += 1
         if (got != want)
           failures += s"ENGINE ${JsonValue.render(specJson)} on ${JsonValue.render(value)}: engine=$got interp=$want"
       }
     }
-    info(s"checked $checked engine verdicts, 2000 canonical verdicts")
+    info(s"checked $checked engine verdicts")
     assert(failures.isEmpty, failures.take(10).mkString("\n"))
   }
 }
