@@ -97,13 +97,15 @@ object Main {
             try Some(JsonValue.parse(text))
             catch { case e: Exception => println(s"$f - INVALID. Errors:\n1. malformed JSON: ${e.getMessage}"); anyInvalid = true; None }
           inst.foreach { iv =>
-            val ok = prepared.isValid(iv)
+            // one tree-walk gives the verdict and the errors together
+            val errs = Interp.errors(prepared, iv, limit = 20)
+            val ok = errs.isEmpty
             if (!ok) anyInvalid = true
-            if (listMode) println(record(f, ok, if (ok) Vector() else Interp.errors(prepared, iv, 20)))
+            if (listMode) println(record(f, ok, errs))
             else if (ok) println(s"$f - VALID")
             else {
               println(s"$f - INVALID. Errors:")
-              Interp.errors(prepared, iv, limit = 20).zipWithIndex.foreach { case (e, i) =>
+              errs.zipWithIndex.foreach { case (e, i) =>
                 val at = if (e.instancePath.isEmpty) "" else s" (at ${e.instancePath})"
                 println(s"${i + 1}. ${e.message}$at [${e.schemaPath}]")
               }

@@ -52,12 +52,15 @@ object Interp {
 
     /** Tree-walk verdict — the executable specification; the compiled path
       * is differentially tested against it (CompiledSpec). */
-    def isValidInterp(v: JsonValue): Boolean = {
+    def isValidInterp(v: JsonValue): Boolean = valid(entry, v, rootCtx, Nil)
+
+    /** The tree-walk's context at `entry`. */
+    private[Interp] def rootCtx: RootCtx = {
       val res = entry match {
         case o: Spec.Obj => registry.resourceOf(o)
         case _           => registry.rootResource
       }
-      valid(entry, v, RootCtx(registry, res, List(res), assertFormats), Nil)
+      RootCtx(registry, res, List(res), assertFormats)
     }
   }
 
@@ -339,11 +342,40 @@ object Interp {
     * `crates/jsonschema/src/error.rs`). */
   final case class VError(instancePath: String, schemaPath: String, message: String)
 
+  /** An instance or schema location as a chain of segments linked to the
+    * parent, array indices kept as ints: descending costs one small
+    * object, and the path text is built only for an emitted error (the
+    * reference keeps its `Location` lazy the same way, `paths.rs`). */
+  private final class Loc(parent: Loc, key: String, index: Int) {
+    def /(k: String): Loc = new Loc(this, k, -1)
+    def /(i: Int): Loc = new Loc(this, null, i)
+    private def appendTo(sb: java.lang.StringBuilder): Unit = {
+      if (parent ne null) { parent.appendTo(sb); sb.append('/') }
+      if (key ne null) sb.append(key) else sb.append(index)
+    }
+    override def toString: String = {
+      val sb = new java.lang.StringBuilder
+      appendTo(sb)
+      sb.toString
+    }
+  }
+
   /** Collect keyword-level errors for an invalid instance (display-grade:
     * combinator failures are summarized at the combinator keyword, with
-    * recursion into allOf members and the active if-branch; the VERDICT
-    * authority remains `isValid`). Returns empty iff the instance is
-    * valid. Capped at `limit` errors. */
+    * recursion into allOf members and the active if-branch). Returns
+    * empty iff the instance is valid. Capped at `limit` errors.
+    *
+    * One traversal, the analog of the reference's `iter_errors`
+    * (`validator.rs:490-494`): each node yields its own keyword errors and
+    * walks its structural children (`$ref`, `properties`,
+    * `patternProperties`, `additionalProperties`, `prefixItems`, `items`,
+    * `allOf`, `dependentSchemas`, `then`/`else`) directly. The walk's
+    * verdict at every node is the tree-walk `valid`'s, which stays the
+    * verdict authority; keywords that report at themselves (`anyOf`,
+    * `oneOf`, `not`, `if`, `contains`, `propertyNames`, `unevaluated*`,
+    * `$dynamicRef`, `$recursiveRef`) ask `valid` of their subschemas. The
+    * cost is one tree-walk plus the paths and messages of the errors it
+    * emits; the walk stops once `limit` errors are out. */
   def errors(p: Prepared, v: JsonValue, limit: Int = 100): Vector[VError] =
     errors(p, v, limit, masked = false)
 
@@ -352,212 +384,261 @@ object Interp {
     * data (values and offending property names are redacted) so errors
     * can be logged/shipped without leaking row contents; paths remain. */
   def errors(p: Prepared, v: JsonValue, limit: Int, masked: Boolean): Vector[VError] = {
-    def shv(x: => String): String = if (masked) "value" else x
-    def shk(k: => String): String = if (masked) "<redacted>" else s"'$k'"
-    val out = Vector.newBuilder[VError]
-    var n = 0
-    val res = p.entry match {
-      case o: Spec.Obj => p.registry.resourceOf(o)
-      case _           => p.registry.rootResource
-    }
-    def emit(ip: String, sp: String, msg: String): Unit =
-      if (n < limit) { out += VError(ip, sp, msg); n += 1 }
+    val w = new ErrorWalk(limit, masked)
+    val verdict = w.walk(p.entry, v, new Loc(null, "", -1), new Loc(null, "#", -1), p.rootCtx, Nil)
+    val r = w.result()
+    // an invalid instance must surface at least one error even when the
+    // failure lives behind a summarized construct
+    if (!verdict && r.isEmpty) Vector(VError("", "#", "instance is invalid")) else r
+  }
 
-    def walk(spec: Spec, value: JsonValue, ip: String, sp: String,
-             ctx: RootCtx, stack: List[(Spec, JsonValue)]): Unit = spec match {
-      case Spec.Accept => ()
-      case Spec.Reject =>
-        emit(ip, sp, s"False schema does not allow ${shv(JsonValue.render(value))}")
-      case s: Spec.Obj =>
-        if (n >= limit) return
-        val st = stack
-        val c2 = entered(spec, ctx)
-        def sub(kw: String) = s"$sp/$kw"
-        def okV(x: Spec, value2: JsonValue) =
-          valid(x, value2, c2, if (value2 eq value) st else Nil)
+  /** One `errors` call: the errors out so far, at most `limit`. */
+  private final class ErrorWalk(limit: Int, masked: Boolean) {
+    private val out = Vector.newBuilder[VError]
+    private var n = 0
+    def result(): Vector[VError] = out.result()
 
-        s.ref.foreach { r =>
-          val (rs, rctx) = resolveRef(r, c2)
-          // ref-arrival cycle guard (mirrors valid()): a repeat of the
-          // same ref target at the same instance is vacuously valid
-          if (!st.exists { case (x, in) => (x eq rs) && (in eq value) }) {
-            val st2 = (rs, value) :: st
-            if (!valid(rs, value, rctx, st2)) walk(rs, value, ip, sub("$ref"), rctx, st2)
-          }
-        }
-        s.types.foreach { ts =>
-          if (!typeMatches(ts, value)) {
-            val names = JsonType.all.filter(ts.contains).map(t => "\"" + t.name + "\"")
-            val noun = if (names.length == 1) "type" else "types"
-            emit(ip, sub("type"),
-              s"${shv(JsonValue.render(value))} is not of $noun ${names.mkString(", ")}")
-          }
-        }
-        s.const.foreach(c => if (!JsonValue.equal(c, value))
-          emit(ip, sub("const"), s"${JsonValue.render(c)} was expected"))
-        s.enumVals.foreach { es =>
-          if (!es.exists(JsonValue.equal(_, value))) {
-            val r = es.map(JsonValue.render)
-            val listed = r.length match {
-              case 1 => r(0)
-              case 2 => s"${r(0)} or ${r(1)}"
-              case 3 => s"${r(0)}, ${r(1)} or ${r(2)}"
-              case n => s"${r(0)}, ${r(1)} or ${n - 2} other candidates"
-            }
-            emit(ip, sub("enum"), s"${shv(JsonValue.render(value))} is not one of $listed")
-          }
-        }
-        value match {
-          case JNum(num) =>
-            s.minimum.foreach(m => if (num < m) emit(ip, sub("minimum"), s"${shv(num.toString)} is less than the minimum of $m"))
-            s.maximum.foreach(m => if (num > m) emit(ip, sub("maximum"), s"${shv(num.toString)} is greater than the maximum of $m"))
-            s.exclusiveMinimum.foreach(m => if (num <= m) emit(ip, sub("exclusiveMinimum"), s"${shv(num.toString)} is less than or equal to the minimum of $m"))
-            s.exclusiveMaximum.foreach(m => if (num >= m) emit(ip, sub("exclusiveMaximum"), s"${shv(num.toString)} is greater than or equal to the maximum of $m"))
-            s.multipleOf.foreach(m => if ((num remainder m).signum != 0)
-              emit(ip, sub("multipleOf"), s"${shv(num.toString)} is not a multiple of $m"))
-          case JStr(str) =>
-            val cp = codePoints(str)
-            def chars(m: Long) = if (m == 1L) "character" else "characters"
-            s.minLength.foreach(m => if (cp < m) emit(ip, sub("minLength"),
-              s"${shv(JsonValue.render(value))} is shorter than $m ${chars(m)}"))
-            s.maxLength.foreach(m => if (cp > m) emit(ip, sub("maxLength"),
-              s"${shv(JsonValue.render(value))} is longer than $m ${chars(m)}"))
-            s.pattern.foreach(pt => if (!compiled(pt).matcher(str).find())
-              emit(ip, sub("pattern"),
-                s"${shv(JsonValue.render(value))} does not match ${JsonValue.render(JStr(pt))}"))
-            if (p.assertFormats)
-              s.format.foreach(f => graft.compile.Formats.scalaPredicate(f).foreach { pred =>
-                if (!pred(str)) emit(ip, sub("format"),
-                  s"${shv(JsonValue.render(value))} is not a ${JsonValue.render(JStr(f))}")
-              })
-          case o: JObj =>
-            s.required.foreach(r => if (!o.toMap.contains(r))
-              emit(ip, sub("required"), "\"" + r + "\" is a required property"))
-            def props(m: Long) = if (m == 1L) "property" else "properties"
-            s.minProperties.foreach(m => if (o.fields.length < m)
-              emit(ip, sub("minProperties"),
-                s"${shv(JsonValue.render(value))} has less than $m ${props(m)}"))
-            s.maxProperties.foreach(m => if (o.fields.length > m)
-              emit(ip, sub("maxProperties"),
-                s"${shv(JsonValue.render(value))} has more than $m ${props(m)}"))
-            s.properties.foreach { case (k, psub) =>
-              o.get(k).foreach { pv =>
-                if (!okV(psub, pv)) walk(psub, pv, s"$ip/$k", s"${sub("properties")}/$k", c2, Nil)
-              }
-            }
-            s.patternProperties.foreach { case (pat, psub) =>
-              val re = compiled(pat)
-              o.fields.foreach { case (k, pv) =>
-                if (re.matcher(k).find() && !okV(psub, pv))
-                  walk(psub, pv, s"$ip/$k", s"${sub("patternProperties")}/$pat", c2, Nil)
-              }
-            }
-            s.additionalProperties.foreach { ap =>
-              val names = s.propertyNameSet
-              val pats = s.patternProperties.map(pp => compiled(pp._1))
-              val extra = o.fields.collect {
-                case (k, pv) if !names.contains(k) && !pats.exists(_.matcher(k).find()) &&
-                  !okV(ap, pv) => (k, pv)
-              }
-              if (ap == Spec.Reject && extra.nonEmpty) {
-                // one aggregated error, the reference's template
-                // (`keywords/mod.rs` unexpected-property message)
-                val listed = extra.map(e => shk(e._1)).mkString(", ")
-                val verb = if (extra.length == 1) "was" else "were"
-                emit(ip, sub("additionalProperties"),
-                  s"Additional properties are not allowed ($listed $verb unexpected)")
-              } else extra.foreach { case (k, pv) =>
-                walk(ap, pv, s"$ip/$k", sub("additionalProperties"), c2, Nil)
-              }
-            }
-            s.propertyNames.foreach { pn =>
-              o.fields.foreach { case (k, _) =>
-                if (!okV(pn, JStr(k)))
-                  emit(ip, sub("propertyNames"), s"property name ${shk(k)} is invalid")
-              }
-            }
-            s.dependentRequired.foreach { case (k, deps) =>
-              if (o.toMap.contains(k)) deps.foreach(d => if (!o.toMap.contains(d))
-                emit(ip, sub("dependentRequired"), s"'$d' is required when '$k' is present"))
-            }
-            s.dependentSchemas.foreach { case (k, dsub) =>
-              if (o.toMap.contains(k) && !okV(dsub, value))
-                walk(dsub, value, ip, s"${sub("dependentSchemas")}/$k", c2, st)
-            }
-            s.unevaluatedProperties.foreach { u =>
-              val ev = evaluatedProps(s, o, c2, st, includeSelfUneval = false)
-              o.fields.foreach { case (k, pv) =>
-                if (!ev.contains(k) && !okV(u, pv))
-                  emit(s"$ip/$k", sub("unevaluatedProperties"), s"unevaluated property ${shk(k)} is not allowed")
-              }
-            }
-          case JArr(a) =>
-            def items(m: Long) = if (m == 1L) "item" else "items"
-            s.minItems.foreach(m => if (a.length < m) emit(ip, sub("minItems"),
-              s"${shv(JsonValue.render(value))} has less than $m ${items(m)}"))
-            s.maxItems.foreach(m => if (a.length > m) emit(ip, sub("maxItems"),
-              s"${shv(JsonValue.render(value))} has more than $m ${items(m)}"))
-            if (s.uniqueItems && !allUnique(a))
-              emit(ip, sub("uniqueItems"), s"${shv(JsonValue.render(value))} has non-unique elements")
-            s.prefixItems.zipWithIndex.foreach { case (psub, i) =>
-              if (i < a.length && !okV(psub, a(i)))
-                walk(psub, a(i), s"$ip/$i", s"${sub("prefixItems")}/$i", c2, Nil)
-            }
-            s.items.foreach { isub =>
-              a.zipWithIndex.drop(s.prefixItems.length).foreach { case (x, i) =>
-                if (!okV(isub, x)) walk(isub, x, s"$ip/$i", sub("items"), c2, Nil)
-              }
-            }
-            s.contains.foreach { csub =>
-              val cn = a.count(okV(csub, _))
-              val lo = s.minContains.getOrElse(1L)
-              if (cn < lo) {
-                if (cn == 0 && s.minContains.isEmpty)
-                  emit(ip, sub("contains"),
-                    s"None of ${shv(JsonValue.render(value))} are valid under the given schema")
-                else emit(ip, sub("contains"), s"array contains $cn matching items, fewer than $lo")
-              }
-              s.maxContains.foreach(hi => if (cn > hi)
-                emit(ip, sub("maxContains"), s"array contains $cn matching items, more than $hi"))
-            }
-            s.unevaluatedItems.foreach { u =>
-              val (allCov, prefix, cont) = itemCov(s, value, c2, st, includeSelfUneval = false)
-              if (!allCov) a.zipWithIndex.foreach { case (x, i) =>
-                if (i >= prefix && !cont.exists(okV(_, x)) && !okV(u, x))
-                  emit(s"$ip/$i", sub("unevaluatedItems"), s"unevaluated item at index $i is not allowed")
-              }
-            }
-          case _ => ()
-        }
-        s.allOf.zipWithIndex.foreach { case (m, i) =>
-          if (!okV(m, value)) walk(m, value, ip, s"${sub("allOf")}/$i", c2, st)
-        }
-        if (s.anyOf.nonEmpty && !s.anyOf.exists(okV(_, value)))
-          emit(ip, sub("anyOf"), s"${shv(JsonValue.render(value))} is not valid under any of the schemas listed in the 'anyOf' keyword")
-        if (s.oneOf.nonEmpty) {
-          val cnt = s.oneOf.count(okV(_, value))
-          if (cnt == 0) emit(ip, sub("oneOf"), s"${shv(JsonValue.render(value))} is not valid under any of the schemas listed in the 'oneOf' keyword")
-          else if (cnt > 1) emit(ip, sub("oneOf"), s"${shv(JsonValue.render(value))} is valid under more than one of the schemas listed in the 'oneOf' keyword")
-        }
-        s.not.foreach(nt => if (okV(nt, value))
-          emit(ip, sub("not"),
-            s"${JsonValue.render(Spec.toJson(nt))} is not allowed for ${shv(JsonValue.render(value))}"))
-        s.ifSpec.foreach { i =>
-          if (okV(i, value)) s.thenSpec.foreach { t =>
-            if (!okV(t, value)) walk(t, value, ip, sub("then"), c2, st)
-          } else s.elseSpec.foreach { e =>
-            if (!okV(e, value)) walk(e, value, ip, sub("else"), c2, st)
-          }
-        }
+    private def shv(x: => String): String = if (masked) "value" else x
+    private def shk(k: String): String = if (masked) "<redacted>" else s"'$k'"
+    private def shown(x: JsonValue): String = shv(JsonValue.render(x))
+
+    /** Emit one error while under the cap; answers the failed verdict. */
+    private def fail(ip: Loc, sp: Loc, msg: => String): Boolean = {
+      if (n < limit) { out += VError(ip.toString, sp.toString, msg); n += 1 }
+      false
     }
 
-    if (p.isValid(v)) Vector.empty
-    else {
-      walk(p.entry, v, "", "#", RootCtx(p.registry, res, List(res), p.assertFormats), Nil)
-      val r = out.result()
-      // an invalid instance must surface at least one error even when the
-      // failure lives behind a summarized construct
-      if (r.isEmpty) Vector(VError("", "#", "instance is invalid")) else r
+    // `limit` errors are out: the instance is invalid and nothing more
+    // can be emitted, so every walk still open may answer false at once
+    private def full: Boolean = n > 0 && n >= limit
+
+    /** All of `xs` hold under `f`, every one of them evaluated (each may
+      * emit errors). */
+    private def every[A](xs: Vector[A])(f: A => Boolean): Boolean = {
+      var ok = true
+      val it = xs.iterator
+      while (it.hasNext) ok &= f(it.next())
+      ok
+    }
+
+    /** Verdict of `spec` on `value`, equal to `valid`'s, emitting the
+      * errors of the failing keywords on the way. */
+    def walk(spec: Spec, value: JsonValue, ip: Loc, sp: Loc,
+             ctx: RootCtx, stack: List[(Spec, JsonValue)]): Boolean = spec match {
+      case Spec.Accept => true
+      case Spec.Reject => fail(ip, sp, s"False schema does not allow ${shown(value)}")
+      case s: Spec.Obj => !full && node(s, value, ip, sp, entered(spec, ctx), stack)
+    }
+
+    private def node(s: Spec.Obj, value: JsonValue, ip: Loc, sp: Loc,
+                     c2: RootCtx, st: List[(Spec, JsonValue)]): Boolean = {
+      def okV(x: Spec, value2: JsonValue) =
+        valid(x, value2, c2, if (value2 eq value) st else Nil)
+      // ref-arrival cycle guard (mirrors valid()): a repeat of the same
+      // ref target at the same instance is vacuously valid
+      def refOk(rs: Spec)(f: List[(Spec, JsonValue)] => Boolean) =
+        st.exists { case (x, in) => (x eq rs) && (in eq value) } || f((rs, value) :: st)
+
+      var ok = s.ref.forall { r =>
+        val (rs, rctx) = resolveRef(r, c2)
+        refOk(rs)(walk(rs, value, ip, sp / "$ref", rctx, _))
+      }
+      ok &= s.dynamicRef.forall { r =>
+        c2.registry.resolveDynamic(r, c2.res, c2.scope) match {
+          case Some((rs, res)) => refOk(rs)(valid(rs, value, rebase(c2, res), _))
+          case None => throw new SpecError(s"unresolvable $$dynamicRef: $r")
+        }
+      }
+      ok &= s.recursiveRef.forall { _ =>
+        val (rs, res) = c2.registry.resolveRecursive(c2.res, c2.scope)
+        refOk(rs)(valid(rs, value, rebase(c2, res), _))
+      }
+      ok &= s.types.forall { ts =>
+        typeMatches(ts, value) || fail(ip, sp / "type", {
+          val names = JsonType.all.filter(ts.contains).map(t => "\"" + t.name + "\"")
+          val noun = if (names.length == 1) "type" else "types"
+          s"${shown(value)} is not of $noun ${names.mkString(", ")}"
+        })
+      }
+      ok &= s.const.forall(c => JsonValue.equal(c, value) ||
+        fail(ip, sp / "const", s"${JsonValue.render(c)} was expected"))
+      ok &= s.enumVals.forall { es =>
+        es.exists(JsonValue.equal(_, value)) || fail(ip, sp / "enum", {
+          val r = es.map(JsonValue.render)
+          val listed = r.length match {
+            case 1 => r(0)
+            case 2 => s"${r(0)} or ${r(1)}"
+            case 3 => s"${r(0)}, ${r(1)} or ${r(2)}"
+            case k => s"${r(0)}, ${r(1)} or ${k - 2} other candidates"
+          }
+          s"${shown(value)} is not one of $listed"
+        })
+      }
+      ok &= (value match {
+        case JNum(num) => number(s, num, ip, sp)
+        case JStr(str) => string(s, value, str, ip, sp, c2.assertFormats)
+        case o: JObj   => obj(s, o, ip, sp, c2, st)
+        case JArr(a)   => arr(s, value, a, ip, sp, c2, st)
+        case _         => true
+      })
+      if (s.allOf.nonEmpty) {
+        val spa = sp / "allOf"
+        var i = 0
+        while (i < s.allOf.length) { ok &= walk(s.allOf(i), value, ip, spa / i, c2, st); i += 1 }
+      }
+      ok &= s.anyOf.isEmpty || s.anyOf.exists(okV(_, value)) || fail(ip, sp / "anyOf",
+        s"${shown(value)} is not valid under any of the schemas listed in the 'anyOf' keyword")
+      if (s.oneOf.nonEmpty) {
+        // stop at the second match, as valid() does
+        var cnt = 0
+        val it = s.oneOf.iterator
+        while (cnt < 2 && it.hasNext) if (okV(it.next(), value)) cnt += 1
+        if (cnt == 0) ok = fail(ip, sp / "oneOf",
+          s"${shown(value)} is not valid under any of the schemas listed in the 'oneOf' keyword")
+        else if (cnt > 1) ok = fail(ip, sp / "oneOf",
+          s"${shown(value)} is valid under more than one of the schemas listed in the 'oneOf' keyword")
+      }
+      ok &= s.not.forall(nt => !okV(nt, value) || fail(ip, sp / "not",
+        s"${JsonValue.render(Spec.toJson(nt))} is not allowed for ${shown(value)}"))
+      ok &= s.ifSpec.forall { i =>
+        if (okV(i, value)) s.thenSpec.forall(walk(_, value, ip, sp / "then", c2, st))
+        else s.elseSpec.forall(walk(_, value, ip, sp / "else", c2, st))
+      }
+      ok
+    }
+
+    private def number(s: Spec.Obj, num: BigDecimal, ip: Loc, sp: Loc): Boolean =
+      s.minimum.forall(m => num >= m || fail(ip, sp / "minimum",
+        s"${shv(num.toString)} is less than the minimum of $m")) &
+      s.maximum.forall(m => num <= m || fail(ip, sp / "maximum",
+        s"${shv(num.toString)} is greater than the maximum of $m")) &
+      s.exclusiveMinimum.forall(m => num > m || fail(ip, sp / "exclusiveMinimum",
+        s"${shv(num.toString)} is less than or equal to the minimum of $m")) &
+      s.exclusiveMaximum.forall(m => num < m || fail(ip, sp / "exclusiveMaximum",
+        s"${shv(num.toString)} is greater than or equal to the maximum of $m")) &
+      s.multipleOf.forall(m => (num remainder m).signum == 0 || fail(ip, sp / "multipleOf",
+        s"${shv(num.toString)} is not a multiple of $m"))
+
+    private def string(s: Spec.Obj, value: JsonValue, str: String, ip: Loc, sp: Loc,
+                       assertFormats: Boolean): Boolean = {
+      lazy val cp = codePoints(str)
+      def chars(m: Long) = if (m == 1L) "character" else "characters"
+      s.minLength.forall(m => cp >= m || fail(ip, sp / "minLength",
+        s"${shown(value)} is shorter than $m ${chars(m)}")) &
+      s.maxLength.forall(m => cp <= m || fail(ip, sp / "maxLength",
+        s"${shown(value)} is longer than $m ${chars(m)}")) &
+      s.pattern.forall(pt => compiled(pt).matcher(str).find() || fail(ip, sp / "pattern",
+        s"${shown(value)} does not match ${JsonValue.render(JStr(pt))}")) &
+      (!assertFormats || s.format.forall(f =>
+        graft.compile.Formats.scalaPredicate(f).forall(pred => pred(str) || fail(ip, sp / "format",
+          s"${shown(value)} is not a ${JsonValue.render(JStr(f))}"))))
+    }
+
+    private def obj(s: Spec.Obj, o: JObj, ip: Loc, sp: Loc,
+                    c2: RootCtx, st: List[(Spec, JsonValue)]): Boolean = {
+      def okV(x: Spec, value2: JsonValue) = valid(x, value2, c2, Nil)
+      def props(m: Long) = if (m == 1L) "property" else "properties"
+      var ok = every(s.required)(r => o.has(r) ||
+        fail(ip, sp / "required", "\"" + r + "\" is a required property"))
+      ok &= s.minProperties.forall(m => o.fields.length >= m || fail(ip, sp / "minProperties",
+        s"${shown(o)} has less than $m ${props(m)}"))
+      ok &= s.maxProperties.forall(m => o.fields.length <= m || fail(ip, sp / "maxProperties",
+        s"${shown(o)} has more than $m ${props(m)}"))
+      if (s.properties.nonEmpty) {
+        val spp = sp / "properties"
+        ok &= every(s.properties) { case (k, psub) =>
+          o.get(k).forall(walk(psub, _, ip / k, spp / k, c2, Nil))
+        }
+      }
+      if (s.patternProperties.nonEmpty) {
+        val spp = sp / "patternProperties"
+        ok &= every(s.patternProperties) { case (pat, psub) =>
+          val re = compiled(pat)
+          every(o.fields) { case (k, pv) => !re.matcher(k).find() || walk(psub, pv, ip / k, spp / pat, c2, Nil) }
+        }
+      }
+      ok &= s.additionalProperties.forall { ap =>
+        val names = s.propertyNameSet
+        val pats = s.patternProperties.map(pp => compiled(pp._1))
+        def extra(k: String) = !names.contains(k) && !pats.exists(_.matcher(k).find())
+        if (ap == Spec.Reject) {
+          val listed = o.fields.collect { case (k, _) if extra(k) => k }
+          // one aggregated error, the reference's template
+          // (`keywords/mod.rs` unexpected-property message)
+          listed.isEmpty || fail(ip, sp / "additionalProperties", {
+            val verb = if (listed.length == 1) "was" else "were"
+            s"Additional properties are not allowed (${listed.map(shk).mkString(", ")} $verb unexpected)"
+          })
+        } else {
+          val spa = sp / "additionalProperties"
+          every(o.fields) { case (k, pv) => !extra(k) || walk(ap, pv, ip / k, spa, c2, Nil) }
+        }
+      }
+      ok &= s.propertyNames.forall(pn => every(o.fields) { case (k, _) =>
+        okV(pn, JStr(k)) || fail(ip, sp / "propertyNames", s"property name ${shk(k)} is invalid")
+      })
+      ok &= every(s.dependentRequired) { case (k, deps) =>
+        !o.has(k) || every(deps)(d => o.has(d) ||
+          fail(ip, sp / "dependentRequired", s"'$d' is required when '$k' is present"))
+      }
+      ok &= every(s.dependentSchemas) { case (k, dsub) =>
+        !o.has(k) || walk(dsub, o, ip, sp / "dependentSchemas" / k, c2, st)
+      }
+      ok &= s.unevaluatedProperties.forall { u =>
+        val ev = evaluatedProps(s, o, c2, st, includeSelfUneval = false)
+        every(o.fields) { case (k, pv) =>
+          ev.contains(k) || okV(u, pv) || fail(ip / k, sp / "unevaluatedProperties",
+            s"unevaluated property ${shk(k)} is not allowed")
+        }
+      }
+      ok
+    }
+
+    private def arr(s: Spec.Obj, value: JsonValue, a: Vector[JsonValue], ip: Loc, sp: Loc,
+                    c2: RootCtx, st: List[(Spec, JsonValue)]): Boolean = {
+      def okV(x: Spec, value2: JsonValue) = valid(x, value2, c2, Nil)
+      def items(m: Long) = if (m == 1L) "item" else "items"
+      var ok = s.minItems.forall(m => a.length >= m || fail(ip, sp / "minItems",
+        s"${shown(value)} has less than $m ${items(m)}"))
+      ok &= s.maxItems.forall(m => a.length <= m || fail(ip, sp / "maxItems",
+        s"${shown(value)} has more than $m ${items(m)}"))
+      ok &= !s.uniqueItems || allUnique(a) ||
+        fail(ip, sp / "uniqueItems", s"${shown(value)} has non-unique elements")
+      var idx = 0
+      if (s.prefixItems.nonEmpty) {
+        val spp = sp / "prefixItems"
+        while (idx < s.prefixItems.length && idx < a.length && !full) {
+          ok &= walk(s.prefixItems(idx), a(idx), ip / idx, spp / idx, c2, Nil)
+          idx += 1
+        }
+      }
+      s.items match {
+        case Some(isub) =>
+          val spi = sp / "items"
+          idx = s.prefixItems.length
+          while (idx < a.length && !full) {
+            ok &= walk(isub, a(idx), ip / idx, spi, c2, Nil)
+            idx += 1
+          }
+        case None => ()
+      }
+      ok &= s.contains.forall { csub =>
+        val cn = a.count(okV(csub, _))
+        val lo = s.minContains.getOrElse(1L)
+        (cn >= lo || fail(ip, sp / "contains",
+          if (cn == 0 && s.minContains.isEmpty) s"None of ${shown(value)} are valid under the given schema"
+          else s"array contains $cn matching items, fewer than $lo")) &
+        s.maxContains.forall(hi => cn <= hi || fail(ip, sp / "maxContains",
+          s"array contains $cn matching items, more than $hi"))
+      }
+      ok &= s.unevaluatedItems.forall { u =>
+        val (allCov, prefix, cont) = itemCov(s, value, c2, st, includeSelfUneval = false)
+        allCov || every(a.zipWithIndex) { case (x, i) =>
+          i < prefix || cont.exists(okV(_, x)) || okV(u, x) ||
+            fail(ip / i, sp / "unevaluatedItems", s"unevaluated item at index $i is not allowed")
+        }
+      }
+      ok
     }
   }
 

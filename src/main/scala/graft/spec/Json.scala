@@ -174,30 +174,64 @@ object JsonValue {
     case _ => false
   }
 
-  /** Render as compact JSON text (stable field order = input order). */
-  def render(v: JsonValue): String = v match {
-    case JNull    => "null"
-    case JBool(b) => b.toString
-    case JNum(n)  =>
-      if (n.isWhole && n.abs < BigDecimal("9223372036854775807")) n.toBigInt.toString
-      else n.bigDecimal.toPlainString
-    case JStr(s)  => quote(s)
-    case JArr(xs) => xs.map(render).mkString("[", ",", "]")
-    case JObj(fs) => fs.map { case (k, x) => quote(k) + ":" + render(x) }.mkString("{", ",", "}")
+  private val I64Max = BigDecimal("9223372036854775807")
+
+  /** Render as compact JSON text (stable field order = input order).
+    * Integral numbers below the i64 bound print as integers, the rest in
+    * plain notation. The text is part of error messages, Spark message
+    * literals and the compiled and streaming dispatch tables, so its form
+    * is fixed (ErrorsSpec's render goldens). One builder for the whole
+    * value: error messages render multi-MB subtrees. */
+  def render(v: JsonValue): String = {
+    val sb = new java.lang.StringBuilder
+    renderInto(sb, v)
+    sb.toString
   }
 
-  def quote(s: String): String = {
-    val sb = new StringBuilder("\"")
-    s.foreach {
-      case '"'  => sb.append("\\\"")
-      case '\\' => sb.append("\\\\")
-      case '\n' => sb.append("\\n")
-      case '\r' => sb.append("\\r")
-      case '\t' => sb.append("\\t")
-      case c if c < ' ' => sb.append(f"\\u${c.toInt}%04x")
-      case c => sb.append(c)
+  private def renderInto(sb: java.lang.StringBuilder, v: JsonValue): Unit = v match {
+    case JNull    => sb.append("null")
+    case JBool(b) => sb.append(b)
+    case j @ JNum(n) =>
+      sb.append(if (j.isIntegral && n.abs < I64Max) n.toBigInt.toString
+                else n.bigDecimal.toPlainString)
+    case JStr(s)  => quoteInto(sb, s)
+    case JArr(xs) =>
+      sb.append('[')
+      val it = xs.iterator
+      while (it.hasNext) {
+        renderInto(sb, it.next())
+        if (it.hasNext) sb.append(',')
+      }
+      sb.append(']')
+    case JObj(fs) =>
+      sb.append('{')
+      val it = fs.iterator
+      while (it.hasNext) {
+        val (k, x) = it.next()
+        quoteInto(sb, k); sb.append(':'); renderInto(sb, x)
+        if (it.hasNext) sb.append(',')
+      }
+      sb.append('}')
+  }
+
+  private def quoteInto(sb: java.lang.StringBuilder, s: String): Unit = {
+    sb.append('"')
+    var i = 0
+    while (i < s.length) {
+      s.charAt(i) match {
+        case '"'  => sb.append("\\\"")
+        case '\\' => sb.append("\\\\")
+        case '\n' => sb.append("\\n")
+        case '\r' => sb.append("\\r")
+        case '\t' => sb.append("\\t")
+        case c if c < ' ' =>
+          sb.append("\\u00").append(Character.forDigit(c >> 4, 16))
+            .append(Character.forDigit(c & 15, 16))
+        case c => sb.append(c)
+      }
+      i += 1
     }
-    sb.append('"').toString
+    sb.append('"')
   }
 }
 

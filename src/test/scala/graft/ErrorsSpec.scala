@@ -82,23 +82,126 @@ class ErrorsSpec extends AnyFunSuite {
   }
 
   test("every invalid official-suite case yields at least one error; valid cases none") {
+    // every vendored corpus: the 18 official-suite files and the 30
+    // canonical-suite files, at three limits, open and masked
+    val suite = Seq("anchor.json", "array.json", "combinators.json", "conditional.json",
+      "content.json", "content_assert.json", "dynamicref.json", "ecmascript_regex.json",
+      "enum_const.json", "format.json", "numeric.json", "object.json", "recursiveref.json",
+      "ref.json", "ref_advanced.json", "string.json", "type.json", "unevaluated.json")
+      .flatMap(f => SuiteHarness.loadResource(f).map(c =>
+        (s"$f/${c.group}/${c.description}", c.schema, c.data)))
+    val canonical = CanonicalSuiteSpec.files.flatMap(f => CanonicalSuiteSpec.load(f).flatMap(g =>
+      for (schema <- g.schemas; (data, _) <- g.tests) yield (s"$f/${g.desc}", schema, data)))
     var checked = 0
-    for (f <- Seq("object.json", "array.json", "combinators.json", "numeric.json",
-      "string.json", "conditional.json", "ref.json", "unevaluated.json")) {
-      SuiteHarness.loadResource(f).foreach { c =>
-        val spec = try Spec.parse(c.schema) catch { case _: SpecError => null }
-        if (spec != null) {
-          val p = Interp.prepare(spec)
-          val verdict = try Some(p.isValid(c.data)) catch { case _: SpecError => None }
-          verdict.foreach { ok =>
-            val e = Interp.errors(p, c.data)
-            assert(e.isEmpty == ok, s"$f/${c.group}/${c.description}: valid=$ok errors=${e.take(3)}")
-            checked += 1
+    (suite ++ canonical).foreach { case (at, schema, data) =>
+      CanonicalSuiteSpec.orSkip(Interp.prepare(Spec.parse(schema))).foreach { p =>
+        CanonicalSuiteSpec.orSkip(p.isValidInterp(data)).foreach { ok =>
+          for (limit <- Seq(1, 20, 100)) {
+            val e = Interp.errors(p, data, limit)
+            val masked = Interp.errors(p, data, limit, masked = true)
+            assert(e.isEmpty == ok, s"$at (limit $limit): valid=$ok errors=${e.take(3)}")
+            assert(e.length <= limit, s"$at: ${e.length} errors over limit $limit")
+            assert(masked.map(x => (x.instancePath, x.schemaPath)) ==
+              e.map(x => (x.instancePath, x.schemaPath)), s"$at (limit $limit): masked paths differ")
           }
+          checked += 1
         }
       }
     }
-    info(s"checked $checked suite cases")
-    assert(checked > 150)
+    info(s"checked $checked corpus pairs")
+    assert(checked > 3500)
   }
+
+  test("the bench documents' planted failures: one error each, multi-MB message intact") {
+    // the invalid copies of the single-document lanes: the edits of
+    // perfbench's DocLanes.copyOf, each breaking one constraint near the
+    // end of the text
+    def swap(t: String, from: String, to: String): String = {
+      val i = t.lastIndexOf(from)
+      assert(i >= 0, s"no '$from'")
+      t.substring(0, i) + to + t.substring(i + from.length)
+    }
+    val tag = "0123456789abcdef"
+    def lane(schema: String, instance: String, tagged: String => String,
+             break: String => String): (Interp.Prepared, JsonValue, JsonValue) = {
+      val p = Interp.prepare(Spec.parse(JsonValue.parse(bench(schema))))
+      val good = tagged(bench(instance))
+      (p, JsonValue.parse(good), JsonValue.parse(break(good)))
+    }
+    def one(p: Interp.Prepared, bad: JsonValue): Interp.VError = {
+      val e = Interp.errors(p, bad, limit = 20)
+      assert(e.length == 1, e.map(x => (x.instancePath, x.schemaPath)))
+      e.head
+    }
+
+    val (rp, rGood, rBad) = lane("recursive_schema.json", "recursive_instance.json",
+      swap(_, "\"term1\"", s"\"term-$tag\""), swap(_, "1000002,", "1000002.5,"))
+    assert(Interp.errors(rp, rGood, limit = 20).isEmpty)
+    assert(one(rp, rBad) == Interp.VError("/2/6", "#/items/prefixItems/6/type",
+      "1000002.5 is not of type \"integer\""))
+
+    val (cp, cGood, cBad) = lane("citm_catalog_schema.json", "citm_catalog.json",
+      swap(_, "\"Salle Pleyel\"", s"\"Salle $tag\""),
+      swap(_, s"\"Salle $tag\"", s"[\"Salle $tag\"]"))
+    assert(Interp.errors(cp, cGood, limit = 20).isEmpty)
+    assert(one(cp, cBad) == Interp.VError("/venueNames/PLEYEL_PLEYEL",
+      "#/properties/venueNames/additionalProperties/type",
+      s"""["Salle $tag"] is not of type "string""""))
+
+    val (gp, gGood, gBad) = lane("geojson.json", "canada.json",
+      swap(_, "\"Canada\"", s"\"Canada $tag\""), { t =>
+        // the last coordinate becomes a string
+        val end = t.lastIndexOf("]]]}}]}")
+        val start = t.lastIndexOf(',', end) + 1
+        t.substring(0, start) + "\"" + t.substring(start, end) + "\"" + t.substring(end)
+      })
+    assert(Interp.errors(gp, gGood, limit = 20).isEmpty)
+    val g = one(gp, gBad)
+    assert(g.instancePath == "/features/0/geometry")
+    assert(g.schemaPath == "#/properties/features/items/properties/geometry/oneOf")
+    val JObj(root) = gBad: @unchecked
+    val JArr(features) = root.find(_._1 == "features").get._2: @unchecked
+    val geometry = features(0).asInstanceOf[JObj].get("geometry").get
+    val expected = JsonValue.render(geometry) +
+      " is not valid under any of the schemas listed in the 'oneOf' keyword"
+    assert(g.message.length == 2090201)
+    assert(g.message == expected)
+  }
+
+  test("render goldens: bench documents and number and string edge cases") {
+    def sha256(s: String): String = java.security.MessageDigest.getInstance("SHA-256")
+      .digest(s.getBytes("UTF-8")).map(b => f"$b%02x").mkString
+    val docs = Seq(
+      "recursive_instance.json" -> "7e86eef3f6c85fc0d0a6d240984db8b1c750565cbf0182a0ea28a0124f29844f",
+      "citm_catalog.json" -> "831f4a8f271d6650d49b87c3af6b6adaaea122e563dd85fa03dc62b03c3ab7ef",
+      "canada.json" -> "bd4f364718711da4bca3c40ee737ef7f0eef3d3f9303067269581be73d65546d")
+    docs.foreach { case (f, want) =>
+      assert(sha256(JsonValue.render(JsonValue.parse(bench(f)))) == want, f)
+    }
+    def r(text: String) = JsonValue.render(JsonValue.parse(text))
+    // integral below the i64 bound prints as an integer; at or beyond it,
+    // and for every fraction, the plain decimal text
+    assert(r("9223372036854775806") == "9223372036854775806")
+    assert(r("9223372036854775807") == "9223372036854775807")
+    assert(r("-9223372036854775808") == "-9223372036854775808")
+    assert(r("92233720368547758070") == "92233720368547758070")
+    assert(r("9223372036854775806.0") == "9223372036854775806")
+    assert(r("9223372036854775807.0") == "9223372036854775807.0")
+    assert(r("-9223372036854775807.00") == "-9223372036854775807.00")
+    assert(r("-0") == "0")
+    assert(r("-0.0") == "0")
+    assert(r("1.0") == "1")
+    assert(r("1E2") == "100")
+    assert(r("1.50") == "1.50")
+    assert(r("2.5e-3") == "0.0025")
+    assert(r("1e400") == "1" + "0" * 400)
+    assert(r("123456789012345678901234567890.000") == "123456789012345678901234567890.000")
+    assert(r("\"a\\u0001\\u001f\\b\\f\\n\\r\\t\\\"\\\\\\/\\u00e9\\ud83d\\ude00\"") ==
+      "\"a\\u0001\\u001f\\u0008\\u000c\\n\\r\\t\\\"\\\\/\u00e9\ud83d\ude00\"")
+    assert(r("{\"k\\n\":[1,2.0,{\"\":null}],\"t\":true,\"f\":false}") ==
+      "{\"k\\n\":[1,2,{\"\":null}],\"t\":true,\"f\":false}")
+  }
+
+  private def bench(name: String): String =
+    new String(getClass.getResourceAsStream(s"/bench/$name").readAllBytes(), "UTF-8")
 }
