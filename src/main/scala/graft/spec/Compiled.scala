@@ -11,7 +11,7 @@ import java.util.regex.Pattern
   * contentSchema kernel, so this is the hot path for dynamic-JSON columns
   * at table scale.
   *
-  * Semantics mirror `Interp.valid` exactly (the tree-walk stays the
+  * Semantics mirror the `Interp` tree-walk exactly (it stays the
   * executable specification; differential tests drive both). Everything
   * compiles — including the annotation-flow keywords (branch-validity-
   * gated evaluated-set collectors) and the dynamic-scope refs:

@@ -82,34 +82,85 @@ class ErrorsSpec extends AnyFunSuite {
   }
 
   test("every invalid official-suite case yields at least one error; valid cases none") {
-    // every vendored corpus: the 18 official-suite files and the 30
-    // canonical-suite files, at three limits, open and masked
+    // every vendored corpus: the official-suite files and the 30
+    // canonical-suite files, at three limits, open and masked. An error
+    // list is empty iff the corpus's own `valid` flag says valid — not the
+    // tree-walk verdict, which is the same walk as `errors`. format.json
+    // and content_assert.json are left out: they assert `format` and
+    // content*, which the tree-walk treats as annotations. Canonical
+    // entries without a flag are checked for the cap and masking only.
     val suite = Seq("anchor.json", "array.json", "combinators.json", "conditional.json",
-      "content.json", "content_assert.json", "dynamicref.json", "ecmascript_regex.json",
-      "enum_const.json", "format.json", "numeric.json", "object.json", "recursiveref.json",
-      "ref.json", "ref_advanced.json", "string.json", "type.json", "unevaluated.json")
+      "content.json", "dynamicref.json", "ecmascript_regex.json", "enum_const.json",
+      "numeric.json", "object.json", "recursiveref.json", "ref.json", "ref_advanced.json",
+      "string.json", "type.json", "unevaluated.json")
       .flatMap(f => SuiteHarness.loadResource(f).map(c =>
-        (s"$f/${c.group}/${c.description}", c.schema, c.data)))
+        (s"$f/${c.group}/${c.description}", c.schema, c.data, Option(c.valid))))
     val canonical = CanonicalSuiteSpec.files.flatMap(f => CanonicalSuiteSpec.load(f).flatMap(g =>
-      for (schema <- g.schemas; (data, _) <- g.tests) yield (s"$f/${g.desc}", schema, data)))
+      for (schema <- g.schemas; (data, want) <- g.tests) yield (s"$f/${g.desc}", schema, data, want)))
     var checked = 0
-    (suite ++ canonical).foreach { case (at, schema, data) =>
+    var flagged = 0
+    (suite ++ canonical).foreach { case (at, schema, data, want) =>
       CanonicalSuiteSpec.orSkip(Interp.prepare(Spec.parse(schema))).foreach { p =>
-        CanonicalSuiteSpec.orSkip(p.isValidInterp(data)).foreach { ok =>
-          for (limit <- Seq(1, 20, 100)) {
-            val e = Interp.errors(p, data, limit)
-            val masked = Interp.errors(p, data, limit, masked = true)
-            assert(e.isEmpty == ok, s"$at (limit $limit): valid=$ok errors=${e.take(3)}")
+        CanonicalSuiteSpec.orSkip(Seq(1, 20, 100).map(limit =>
+          (limit, Interp.errors(p, data, limit), Interp.errors(p, data, limit, masked = true)))
+        ).foreach { runs =>
+          runs.foreach { case (limit, e, masked) =>
+            want.foreach(ok => assert(e.isEmpty == ok, s"$at (limit $limit): valid=$ok errors=${e.take(3)}"))
             assert(e.length <= limit, s"$at: ${e.length} errors over limit $limit")
             assert(masked.map(x => (x.instancePath, x.schemaPath)) ==
               e.map(x => (x.instancePath, x.schemaPath)), s"$at (limit $limit): masked paths differ")
           }
           checked += 1
+          if (want.nonEmpty) flagged += 1
         }
       }
     }
-    info(s"checked $checked corpus pairs")
-    assert(checked > 3500)
+    info(s"checked $checked corpus pairs, $flagged against a corpus verdict")
+    assert(checked > 3500 && flagged > 3000)
+  }
+
+  test("failures behind $dynamicRef and $recursiveRef are reported at the keyword") {
+    def suiteCase(f: String, group: String, desc: String): (JsonValue, JsonValue) = {
+      val c = SuiteHarness.loadResource(f).find(c => c.group == group && c.description == desc).get
+      assert(!c.valid)
+      (c.schema, c.data)
+    }
+    def canonicalCase(group: String, data: String): (JsonValue, JsonValue) = {
+      val g = CanonicalSuiteSpec.load("dynamic_references.json").find(_.desc == group).get
+      val d = JsonValue.parse(data)
+      assert(g.tests.exists { case (x, want) => JsonValue.equal(x, d) && want.contains(false) })
+      (g.schemas.head, d)
+    }
+    val pinned = Seq(
+      suiteCase("dynamicref.json", "A $dynamicRef to a $dynamicAnchor in the same schema " +
+        "resource behaves like a normal $ref to an $anchor", "An array containing non-strings is invalid") ->
+        Interp.VError("/1", "#/items/$dynamicRef/type", "42 is not of type \"string\""),
+      suiteCase("recursiveref.json", "$recursiveRef with $recursiveAnchor resolves to the outermost " +
+        "anchored resource", "b is checked against the OUTER schema (non-object fails)") ->
+        Interp.VError("/a/b", "#/properties/a/$ref/properties/b/$recursiveRef/type",
+          "5 is not of type \"object\""),
+      canonicalCase("a $dynamicRef resolves to the first $dynamicAnchor still in scope", """["a",1]""") ->
+        Interp.VError("/1", "#/$ref/items/$dynamicRef/type", "1 is not of type \"string\""))
+    pinned.foreach { case ((schema, data), want) =>
+      val p = Interp.prepare(Spec.parse(schema))
+      assert(!p.isValidInterp(data))
+      assert(Interp.errors(p, data) == Vector(want))
+    }
+  }
+
+  test("an error limit below 1 is refused") {
+    val p = Interp.prepare(Spec.parseJson("""{"type":"string"}"""))
+    intercept[IllegalArgumentException](Interp.errors(p, JsonValue.parse("1"), 0))
+    intercept[IllegalArgumentException](Interp.errors(p, JsonValue.parse("1"), -1, masked = true))
+  }
+
+  test("the verdict stops at the first failing keyword; errors walk on") {
+    // `type` fails first, so the verdict never resolves the broken `$ref`
+    // under `properties`; the error walk goes on and does
+    val p = Interp.prepare(Spec.parseJson("""{"type":"string","properties":{"a":{"$ref":"#/nope"}}}"""))
+    val doc = JsonValue.parse("""{"a":1}""")
+    assert(!p.isValidInterp(doc))
+    intercept[SpecError](Interp.errors(p, doc))
   }
 
   test("the bench documents' planted failures: one error each, multi-MB message intact") {

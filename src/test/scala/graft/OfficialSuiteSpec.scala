@@ -5,9 +5,10 @@ import graft.spec.{Interp, Spec}
 
 /** Golden tests over the vendored JSON-Schema-Test-Suite subset
   * (src/test/resources/suite — FIXTURES.md §5). Each triple runs
-  * through BOTH the Spark engine (1-row DataFrame) and the naive
-  * interpreter; cases whose instance isn't representable relationally are
-  * skipped (counted, to keep the skip set visible). */
+  * through the Spark engine (1-row DataFrame) and the single-document
+  * validator; cases whose instance isn't representable relationally are
+  * skipped by the engine (counted, to keep the skip set visible) but
+  * still checked on the tree-walk. */
 class OfficialSuiteSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
 
@@ -24,7 +25,7 @@ class OfficialSuiteSpec extends AnyFunSuite {
     test(s"suite $f (${cases.length} cases)") {
       val failures = scala.collection.mutable.Buffer[String]()
       var skippedHere = 0
-      // the interpreter treats `format` and content* as annotation-only
+      // the single-document validator treats `format` and content* as annotation-only
       // (like the reference in 2020-12) — skip its check for assertion files
       val interpApplies = f != "format.json" && f != "content_assert.json"
       // content.json carries the OFFICIAL annotation-only expectations; the
@@ -35,6 +36,10 @@ class OfficialSuiteSpec extends AnyFunSuite {
         else graft.compile.CompileOptions()
       cases.foreach { c =>
         val spec = Spec.parse(c.schema)
+        // the tree-walk on every case; `Interp.isValid` below runs the
+        // compiled tier, and only on cases the engine can represent
+        if (interpApplies && Interp.prepare(spec).isValidInterp(c.data) != c.valid)
+          failures += s"[tree-walk] ${c.group} / ${c.description}: want ${c.valid}"
         SuiteHarness.buildAndCompile(spark, spec, c.data, opts) match {
           case None => skippedHere += 1
           case Some(engineGot) =>
