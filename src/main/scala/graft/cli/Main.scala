@@ -97,7 +97,7 @@ object Main {
             try Some(JsonValue.parse(text))
             catch { case e: Exception => println(s"$f - INVALID. Errors:\n1. malformed JSON: ${e.getMessage}"); anyInvalid = true; None }
           inst.foreach { iv =>
-            // one tree-walk gives the verdict and the errors together
+            // one error enumeration gives the verdict and the errors together
             val errs = Interp.errors(prepared, iv, limit = 20)
             val ok = errs.isEmpty
             if (!ok) anyInvalid = true

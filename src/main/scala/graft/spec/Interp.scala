@@ -2,18 +2,21 @@ package graft.spec
 
 /** Single-document validation of a Spec over a JsonValue.
   *
-  * One tree-walk (`ErrorWalk`) answers both verbs of the reference's
-  * `Validator` (`crates/jsonschema/src/validator.rs:490-503`): `errors`
-  * (`iter_errors`) runs it with an error budget of `limit`, and the
-  * tree-walk verdict (`is_valid`, `Prepared.isValidInterp`) is the same
-  * walk with a budget of 0, which stops at the first failing keyword.
-  * That walk is the executable specification: the closure-compiled
-  * (`Compiled`) and streaming (`Streaming`) tiers are tested against its
-  * verdicts, and `Prepared.isValid` falls back to it when the compile
-  * budget is exceeded. `Prepared` also serves the contentSchema kernel
-  * and the meta-schema check, and `isValid` the compiler's static
-  * evaluation (e.g. `propertyNames` over a fixed relational schema's
-  * column names).
+  * One tree-walk (`ErrorWalk`) is the executable specification of both
+  * verbs of the reference's `Validator` (`crates/jsonschema/src/validator.rs:490-503`):
+  * run with an error budget of `limit` it lists the errors
+  * (`Prepared.errorsInterp`), and the tree-walk verdict (`is_valid`,
+  * `Prepared.isValidInterp`) is the same walk with a budget of 0, which
+  * stops at the first failing keyword. The production paths run compiled
+  * closures: `Prepared.isValid` the verdict closures (`Compiled`),
+  * `isValidText` the streaming tier (`Streaming`), and `errors` the
+  * compiled error steps (`Compiled.compileErrors`), all tested against
+  * the tree-walk. The tree-walk answers in production only where a schema
+  * does not compile: over the compile budget, or, for `errors`, a schema
+  * error it raises only when it reaches it. `Prepared` also serves the
+  * contentSchema kernel and the meta-schema check, and `isValid` the
+  * compiler's static evaluation (e.g. `propertyNames` over a fixed
+  * relational schema's column names).
   */
 object Interp {
 
@@ -58,6 +61,20 @@ object Interp {
     /** Tree-walk verdict — the executable specification; the compiled path
       * is differentially tested against it (CompiledSpec). */
     def isValidInterp(v: JsonValue): Boolean = valid(entry, v, rootCtx, Nil)
+
+    /** Compiled error steps (`Compiled.compileErrors`), built on the first
+      * `errors` call so verdict-only users never pay for them; None ⇒ the
+      * tree-walk enumerates. Transient: recompiled lazily per executor. */
+    @transient private[spec] lazy val errorSteps: Option[Compiled.Errors] =
+      Compiled.compileErrors(registry, entry, assertFormats)
+
+    /** Tree-walk error enumeration — the specification of `errors`, and
+      * its answer where the schema does not compile. */
+    private[graft] def errorsInterp(v: JsonValue, limit: Int, masked: Boolean): Vector[VError] = {
+      val out = new Sink(limit, masked)
+      new ErrorWalk(out).walk(entry, v, instanceRoot, schemaRoot, rootCtx, Nil)
+      out.result()
+    }
 
     /** The tree-walk's context at `entry`. */
     private[Interp] def rootCtx: RootCtx = {
@@ -221,7 +238,7 @@ object Interp {
     * parent, array indices kept as ints: descending costs one small
     * object, and the path text is built only for an emitted error (the
     * reference keeps its `Location` lazy the same way, `paths.rs`). */
-  private final class Loc(parent: Loc, key: String, index: Int) {
+  private[spec] final class Loc(parent: Loc, key: String, index: Int) {
     def /(k: String): Loc = if (this eq NoLoc) this else new Loc(this, k, -1)
     def /(i: Int): Loc = if (this eq NoLoc) this else new Loc(this, null, i)
     private def appendTo(sb: java.lang.StringBuilder): Unit = {
@@ -235,13 +252,96 @@ object Interp {
     }
   }
 
+  /** The root instance location (`""`) and schema location (`"#"`). */
+  private[spec] def instanceRoot: Loc = new Loc(null, "", -1)
+  private[spec] def schemaRoot: Loc = new Loc(null, "#", -1)
+
   /** The location of a verdict-only walk, which emits nothing: descending
     * from it builds nothing. */
   private val NoLoc = new Loc(null, "", -1)
 
+  /** Where an error walk's errors go, and the one table of their message
+    * texts, shared by the tree-walk and the compiled error steps
+    * (`Compiled.compileErrors`). `fail` emits while under the budget and
+    * answers whether the walk goes on (`n < limit`); a budget of 0 emits
+    * nothing and answers false at once. Messages are by-name, so a text is
+    * rendered only when it is emitted. */
+  private[spec] final class Sink(limit: Int, masked: Boolean) {
+    private val out = if (limit > 0) Vector.newBuilder[VError] else null
+    private var n = 0
+    def result(): Vector[VError] = out.result()
+
+    def fail(ip: Loc, sp: Loc, msg: => String): Boolean = {
+      if (n < limit) { out += VError(ip.toString, sp.toString, msg); n += 1 }
+      n < limit
+    }
+
+    private def shv(x: => String): String = if (masked) "value" else x
+    def shk(k: String): String = if (masked) "<redacted>" else s"'$k'"
+    def shown(x: JsonValue): String = shv(JsonValue.render(x))
+    private def plural(m: Long, one: String, many: String) = if (m == 1L) one else many
+
+    def falseSchema(v: JsonValue) = s"False schema does not allow ${shown(v)}"
+    def wrongType(ts: Set[JsonType], v: JsonValue): String = {
+      val names = JsonType.all.filter(ts.contains).map(t => "\"" + t.name + "\"")
+      s"${shown(v)} is not of ${plural(names.length, "type", "types")} ${names.mkString(", ")}"
+    }
+    def notConst(c: JsonValue) = s"${JsonValue.render(c)} was expected"
+    def notInEnum(es: Vector[JsonValue], v: JsonValue): String = {
+      val r = es.map(JsonValue.render)
+      val listed = r.length match {
+        case 1 => r(0)
+        case 2 => s"${r(0)} or ${r(1)}"
+        case 3 => s"${r(0)}, ${r(1)} or ${r(2)}"
+        case k => s"${r(0)}, ${r(1)} or ${k - 2} other candidates"
+      }
+      s"${shown(v)} is not one of $listed"
+    }
+    def noneOf(kw: String, v: JsonValue) =
+      s"${shown(v)} is not valid under any of the schemas listed in the '$kw' keyword"
+    def manyOneOf(v: JsonValue) =
+      s"${shown(v)} is valid under more than one of the schemas listed in the 'oneOf' keyword"
+    def notAllowed(nt: Spec, v: JsonValue) =
+      s"${JsonValue.render(Spec.toJson(nt))} is not allowed for ${shown(v)}"
+
+    def belowMinimum(x: BigDecimal, m: BigDecimal) = s"${shv(x.toString)} is less than the minimum of $m"
+    def aboveMaximum(x: BigDecimal, m: BigDecimal) = s"${shv(x.toString)} is greater than the maximum of $m"
+    def atOrBelowMinimum(x: BigDecimal, m: BigDecimal) =
+      s"${shv(x.toString)} is less than or equal to the minimum of $m"
+    def atOrAboveMaximum(x: BigDecimal, m: BigDecimal) =
+      s"${shv(x.toString)} is greater than or equal to the maximum of $m"
+    def notMultipleOf(x: BigDecimal, m: BigDecimal) = s"${shv(x.toString)} is not a multiple of $m"
+
+    def tooShort(v: JsonValue, m: Long) = s"${shown(v)} is shorter than $m ${plural(m, "character", "characters")}"
+    def tooLong(v: JsonValue, m: Long) = s"${shown(v)} is longer than $m ${plural(m, "character", "characters")}"
+    def noMatch(v: JsonValue, pt: String) = s"${shown(v)} does not match ${JsonValue.render(JStr(pt))}"
+    def notFormat(v: JsonValue, f: String) = s"${shown(v)} is not a ${JsonValue.render(JStr(f))}"
+
+    def missing(r: String) = "\"" + r + "\" is a required property"
+    def fewProps(v: JsonValue, m: Long) = s"${shown(v)} has less than $m ${plural(m, "property", "properties")}"
+    def manyProps(v: JsonValue, m: Long) = s"${shown(v)} has more than $m ${plural(m, "property", "properties")}"
+    /** One aggregated error, the reference's template (`keywords/mod.rs`
+      * unexpected-property message). */
+    def unexpected(listed: Seq[String]) =
+      s"Additional properties are not allowed (${listed.map(shk).mkString(", ")} " +
+        s"${plural(listed.length, "was", "were")} unexpected)"
+    def badName(k: String) = s"property name ${shk(k)} is invalid"
+    def missingDependent(d: String, k: String) = s"'$d' is required when '$k' is present"
+    def unevaluatedProperty(k: String) = s"unevaluated property ${shk(k)} is not allowed"
+
+    def fewItems(v: JsonValue, m: Long) = s"${shown(v)} has less than $m ${plural(m, "item", "items")}"
+    def manyItems(v: JsonValue, m: Long) = s"${shown(v)} has more than $m ${plural(m, "item", "items")}"
+    def notUnique(v: JsonValue) = s"${shown(v)} has non-unique elements"
+    def fewContained(v: JsonValue, cn: Int, minContains: Option[Long]) =
+      if (cn == 0 && minContains.isEmpty) s"None of ${shown(v)} are valid under the given schema"
+      else s"array contains $cn matching items, fewer than ${minContains.getOrElse(1L)}"
+    def manyContained(cn: Int, hi: Long) = s"array contains $cn matching items, more than $hi"
+    def unevaluatedItem(i: Int) = s"unevaluated item at index $i is not allowed"
+  }
+
   /** The verdict-only walk. With a budget of 0 it emits nothing and keeps
     * no state, so one instance serves every caller and thread. */
-  private val Verdict = new ErrorWalk(0, masked = false)
+  private val Verdict = new ErrorWalk(new Sink(0, masked = false))
 
   /** Collect keyword-level errors for an instance (display-grade:
     * combinator failures are summarized at the combinator keyword, with
@@ -249,10 +349,14 @@ object Interp {
     * empty iff the instance is valid. Capped at `limit` errors, `limit`
     * at least 1.
     *
-    * The walk that answers the tree-walk verdict, run with an error budget
-    * of `limit`: the analog of the reference's `iter_errors`
-    * (`validator.rs:490-494`), where each node yields its own keyword
-    * errors and walks its structural children. */
+    * The analog of the reference's `iter_errors` (`validator.rs:490-494`),
+    * where each node yields its own keyword errors and walks its
+    * structural children. The lists come from the compiled error steps
+    * (`Compiled.compileErrors`, built on the first call per `Prepared`),
+    * which emit what the tree-walk `ErrorWalk` emits; the tree-walk
+    * answers only where the schema does not compile (over the compile
+    * budget, or a schema error such as an unresolvable `$ref`, which the
+    * walk then raises when, and only if, it reaches it). */
   def errors(p: Prepared, v: JsonValue, limit: Int = 100): Vector[VError] =
     errors(p, v, limit, masked = false)
 
@@ -262,37 +366,26 @@ object Interp {
     * can be logged/shipped without leaking row contents; paths remain. */
   def errors(p: Prepared, v: JsonValue, limit: Int, masked: Boolean): Vector[VError] = {
     require(limit >= 1, s"error limit must be at least 1, got $limit")
-    val w = new ErrorWalk(limit, masked)
-    w.walk(p.entry, v, new Loc(null, "", -1), new Loc(null, "#", -1), p.rootCtx, Nil)
-    w.result()
+    p.errorSteps match {
+      case Some(e) => e(v, limit, masked)
+      case None    => p.errorsInterp(v, limit, masked)
+    }
   }
 
-  /** The one tree-walk, with an error budget of `limit`. It walks the
-    * structural children (`$ref`, `$dynamicRef`, `$recursiveRef`,
-    * `properties`, `patternProperties`, `additionalProperties`,
-    * `prefixItems`, `items`, `allOf`, `dependentSchemas`, `then`/`else`)
-    * and notes each failing keyword, emitting its error while under the
-    * budget. Keywords that report at themselves (`anyOf`, `oneOf`, `not`,
-    * `if`, `contains`, `propertyNames`, `unevaluated*`) take the verdict of
-    * their subschemas from a walk of their own with budget 0 (`valid`).
-    * The walk is full once a keyword has failed and `limit` errors are
-    * out; from then on every keyword step and loop is skipped, so with
-    * budget 0 it stops at the first failing keyword. Every step answers
-    * whether the walk goes on, i.e. is not yet full. */
-  private final class ErrorWalk(limit: Int, masked: Boolean) {
-    private val out = if (limit > 0) Vector.newBuilder[VError] else null
-    private var n = 0
-    def result(): Vector[VError] = out.result()
-
-    private def shv(x: => String): String = if (masked) "value" else x
-    private def shk(k: String): String = if (masked) "<redacted>" else s"'$k'"
-    private def shown(x: JsonValue): String = shv(JsonValue.render(x))
-
-    /** A keyword failed: emit its error while under the budget. */
-    private def fail(ip: Loc, sp: Loc, msg: => String): Boolean = {
-      if (n < limit) { out += VError(ip.toString, sp.toString, msg); n += 1 }
-      n < limit
-    }
+  /** The one tree-walk, writing to `out`. It walks the structural
+    * children (`$ref`, `$dynamicRef`, `$recursiveRef`, `properties`,
+    * `patternProperties`, `additionalProperties`, `prefixItems`, `items`,
+    * `allOf`, `dependentSchemas`, `then`/`else`) and notes each failing
+    * keyword in `out`. Keywords that report at themselves (`anyOf`,
+    * `oneOf`, `not`, `if`, `contains`, `propertyNames`, `unevaluated*`)
+    * take the verdict of their subschemas from a walk of their own with
+    * budget 0 (`valid`). The walk is full once a keyword has failed and
+    * the budget's errors are out; from then on every keyword step and
+    * loop is skipped, so with budget 0 it stops at the first failing
+    * keyword. Every step answers whether the walk goes on, i.e. is not yet
+    * full. */
+  private final class ErrorWalk(out: Sink) {
+    import out.fail
 
     /** `f` holds at every index in [`from`, `until`), stopping at the first
       * where it does not (a loop: `Range.forall` boxes every index). */
@@ -305,7 +398,7 @@ object Interp {
     def walk(spec: Spec, value: JsonValue, ip: Loc, sp: Loc,
              ctx: RootCtx, stack: List[(Spec, JsonValue)]): Boolean = spec match {
       case Spec.Accept => true
-      case Spec.Reject => fail(ip, sp, s"False schema does not allow ${shown(value)}")
+      case Spec.Reject => fail(ip, sp, out.falseSchema(value))
       case s: Spec.Obj => node(s, value, ip, sp, entered(spec, ctx), stack)
     }
 
@@ -340,27 +433,10 @@ object Interp {
         val (rs, res) = c2.registry.resolveRecursive(c2.res, c2.scope)
         ref(rs, rebase(c2, res), "$recursiveRef")
       } &&
-      s.types.forall { ts =>
-        typeMatches(ts, value) || fail(ip, sp / "type", {
-          val names = JsonType.all.filter(ts.contains).map(t => "\"" + t.name + "\"")
-          val noun = if (names.length == 1) "type" else "types"
-          s"${shown(value)} is not of $noun ${names.mkString(", ")}"
-        })
-      } &&
-      s.const.forall(c => JsonValue.equal(c, value) ||
-        fail(ip, sp / "const", s"${JsonValue.render(c)} was expected")) &&
-      s.enumVals.forall { es =>
-        es.exists(JsonValue.equal(_, value)) || fail(ip, sp / "enum", {
-          val r = es.map(JsonValue.render)
-          val listed = r.length match {
-            case 1 => r(0)
-            case 2 => s"${r(0)} or ${r(1)}"
-            case 3 => s"${r(0)}, ${r(1)} or ${r(2)}"
-            case k => s"${r(0)}, ${r(1)} or ${k - 2} other candidates"
-          }
-          s"${shown(value)} is not one of $listed"
-        })
-      } &&
+      s.types.forall(ts => admits(ts, value) || fail(ip, sp / "type", out.wrongType(ts, value))) &&
+      s.const.forall(c => JsonValue.equal(c, value) || fail(ip, sp / "const", out.notConst(c))) &&
+      s.enumVals.forall(es => es.exists(JsonValue.equal(_, value)) ||
+        fail(ip, sp / "enum", out.notInEnum(es, value))) &&
       (value match {
         case JNum(num) => number(s, num, ip, sp)
         case JStr(str) => string(s, value, str, ip, sp, c2.assertFormats)
@@ -372,19 +448,16 @@ object Interp {
         val spa = sp / "allOf"
         indices(0, s.allOf.length)(i => walk(s.allOf(i), value, ip, spa / i, c2, st))
       }) &&
-      (s.anyOf.isEmpty || s.anyOf.exists(trial) || fail(ip, sp / "anyOf",
-        s"${shown(value)} is not valid under any of the schemas listed in the 'anyOf' keyword")) &&
+      (s.anyOf.isEmpty || s.anyOf.exists(trial) || fail(ip, sp / "anyOf", out.noneOf("anyOf", value))) &&
       (s.oneOf.isEmpty || {
         // stop at the second match
         var cnt = 0
         val it = s.oneOf.iterator
         while (cnt < 2 && it.hasNext) if (trial(it.next())) cnt += 1
         cnt == 1 || fail(ip, sp / "oneOf",
-          if (cnt == 0) s"${shown(value)} is not valid under any of the schemas listed in the 'oneOf' keyword"
-          else s"${shown(value)} is valid under more than one of the schemas listed in the 'oneOf' keyword")
+          if (cnt == 0) out.noneOf("oneOf", value) else out.manyOneOf(value))
       }) &&
-      s.not.forall(nt => !trial(nt) || fail(ip, sp / "not",
-        s"${JsonValue.render(Spec.toJson(nt))} is not allowed for ${shown(value)}")) &&
+      s.not.forall(nt => !trial(nt) || fail(ip, sp / "not", out.notAllowed(nt, value))) &&
       s.ifSpec.forall { i =>
         if (trial(i)) s.thenSpec.forall(walk(_, value, ip, sp / "then", c2, st))
         else s.elseSpec.forall(walk(_, value, ip, sp / "else", c2, st))
@@ -392,41 +465,33 @@ object Interp {
     }
 
     private def number(s: Spec.Obj, num: BigDecimal, ip: Loc, sp: Loc): Boolean =
-      s.minimum.forall(m => num >= m || fail(ip, sp / "minimum",
-        s"${shv(num.toString)} is less than the minimum of $m")) &&
-      s.maximum.forall(m => num <= m || fail(ip, sp / "maximum",
-        s"${shv(num.toString)} is greater than the maximum of $m")) &&
-      s.exclusiveMinimum.forall(m => num > m || fail(ip, sp / "exclusiveMinimum",
-        s"${shv(num.toString)} is less than or equal to the minimum of $m")) &&
-      s.exclusiveMaximum.forall(m => num < m || fail(ip, sp / "exclusiveMaximum",
-        s"${shv(num.toString)} is greater than or equal to the maximum of $m")) &&
-      s.multipleOf.forall(m => (num remainder m).signum == 0 || fail(ip, sp / "multipleOf",
-        s"${shv(num.toString)} is not a multiple of $m"))
+      s.minimum.forall(m => num >= m || fail(ip, sp / "minimum", out.belowMinimum(num, m))) &&
+      s.maximum.forall(m => num <= m || fail(ip, sp / "maximum", out.aboveMaximum(num, m))) &&
+      s.exclusiveMinimum.forall(m => num > m ||
+        fail(ip, sp / "exclusiveMinimum", out.atOrBelowMinimum(num, m))) &&
+      s.exclusiveMaximum.forall(m => num < m ||
+        fail(ip, sp / "exclusiveMaximum", out.atOrAboveMaximum(num, m))) &&
+      s.multipleOf.forall(m => (num remainder m).signum == 0 ||
+        fail(ip, sp / "multipleOf", out.notMultipleOf(num, m)))
 
     private def string(s: Spec.Obj, value: JsonValue, str: String, ip: Loc, sp: Loc,
-                       assertFormats: Boolean): Boolean = {
-      def chars(m: Long) = if (m == 1L) "character" else "characters"
-      s.minLength.forall(m => codePoints(str) >= m || fail(ip, sp / "minLength",
-        s"${shown(value)} is shorter than $m ${chars(m)}")) &&
-      s.maxLength.forall(m => codePoints(str) <= m || fail(ip, sp / "maxLength",
-        s"${shown(value)} is longer than $m ${chars(m)}")) &&
-      s.pattern.forall(pt => compiled(pt).matcher(str).find() || fail(ip, sp / "pattern",
-        s"${shown(value)} does not match ${JsonValue.render(JStr(pt))}")) &&
+                       assertFormats: Boolean): Boolean =
+      s.minLength.forall(m => codePoints(str) >= m || fail(ip, sp / "minLength", out.tooShort(value, m))) &&
+      s.maxLength.forall(m => codePoints(str) <= m || fail(ip, sp / "maxLength", out.tooLong(value, m))) &&
+      s.pattern.forall(pt => compiled(pt).matcher(str).find() ||
+        fail(ip, sp / "pattern", out.noMatch(value, pt))) &&
       (!assertFormats || s.format.forall(f =>
-        graft.compile.Formats.scalaPredicate(f).forall(pred => pred(str) || fail(ip, sp / "format",
-          s"${shown(value)} is not a ${JsonValue.render(JStr(f))}"))))
-    }
+        graft.compile.Formats.scalaPredicate(f).forall(pred => pred(str) ||
+          fail(ip, sp / "format", out.notFormat(value, f)))))
 
     private def obj(s: Spec.Obj, o: JObj, ip: Loc, sp: Loc,
                     c2: RootCtx, st: List[(Spec, JsonValue)]): Boolean = {
       def trial(x: Spec, child: JsonValue) = valid(x, child, c2, Nil)
-      def props(m: Long) = if (m == 1L) "property" else "properties"
-      s.required.forall(r => o.has(r) ||
-        fail(ip, sp / "required", "\"" + r + "\" is a required property")) &&
-      s.minProperties.forall(m => o.fields.length >= m || fail(ip, sp / "minProperties",
-        s"${shown(o)} has less than $m ${props(m)}")) &&
-      s.maxProperties.forall(m => o.fields.length <= m || fail(ip, sp / "maxProperties",
-        s"${shown(o)} has more than $m ${props(m)}")) &&
+      s.required.forall(r => o.has(r) || fail(ip, sp / "required", out.missing(r))) &&
+      s.minProperties.forall(m => o.fields.length >= m ||
+        fail(ip, sp / "minProperties", out.fewProps(o, m))) &&
+      s.maxProperties.forall(m => o.fields.length <= m ||
+        fail(ip, sp / "maxProperties", out.manyProps(o, m))) &&
       (s.properties.isEmpty || {
         val spp = sp / "properties"
         s.properties.forall { case (k, psub) =>
@@ -446,25 +511,20 @@ object Interp {
         val names = s.propertyNameSet
         val pats = s.patternProperties.map(pp => compiled(pp._1))
         def extra(k: String) = !names.contains(k) && !pats.exists(_.matcher(k).find())
-        if (ap == Spec.Reject) {
-          // one aggregated error, the reference's template
-          // (`keywords/mod.rs` unexpected-property message)
-          o.fields.forall { case (k, _) => !extra(k) } || fail(ip, sp / "additionalProperties", {
-            val listed = o.fields.collect { case (k, _) if extra(k) => k }
-            val verb = if (listed.length == 1) "was" else "were"
-            s"Additional properties are not allowed (${listed.map(shk).mkString(", ")} $verb unexpected)"
-          })
-        } else {
+        if (ap == Spec.Reject)
+          o.fields.forall { case (k, _) => !extra(k) } || fail(ip, sp / "additionalProperties",
+            out.unexpected(o.fields.collect { case (k, _) if extra(k) => k }))
+        else {
           val spa = sp / "additionalProperties"
           o.fields.forall { case (k, pv) => !extra(k) || walk(ap, pv, ip / k, spa, c2, Nil) }
         }
       } &&
       s.propertyNames.forall(pn => o.fields.forall { case (k, _) =>
-        trial(pn, JStr(k)) || fail(ip, sp / "propertyNames", s"property name ${shk(k)} is invalid")
+        trial(pn, JStr(k)) || fail(ip, sp / "propertyNames", out.badName(k))
       }) &&
       s.dependentRequired.forall { case (k, deps) =>
         !o.has(k) || deps.forall(d => o.has(d) ||
-          fail(ip, sp / "dependentRequired", s"'$d' is required when '$k' is present"))
+          fail(ip, sp / "dependentRequired", out.missingDependent(d, k)))
       } &&
       s.dependentSchemas.forall { case (k, dsub) =>
         !o.has(k) || walk(dsub, o, ip, sp / "dependentSchemas" / k, c2, st)
@@ -472,8 +532,8 @@ object Interp {
       s.unevaluatedProperties.forall { u =>
         val ev = evaluatedProps(s, o, c2, st)
         o.fields.forall { case (k, pv) =>
-          ev.contains(k) || trial(u, pv) || fail(ip / k, sp / "unevaluatedProperties",
-            s"unevaluated property ${shk(k)} is not allowed")
+          ev.contains(k) || trial(u, pv) ||
+            fail(ip / k, sp / "unevaluatedProperties", out.unevaluatedProperty(k))
         }
       }
     }
@@ -481,14 +541,10 @@ object Interp {
     private def arr(s: Spec.Obj, value: JsonValue, a: Vector[JsonValue], ip: Loc, sp: Loc,
                     c2: RootCtx, st: List[(Spec, JsonValue)]): Boolean = {
       def trial(x: Spec, item: JsonValue) = valid(x, item, c2, Nil)
-      def items(m: Long) = if (m == 1L) "item" else "items"
       val prefix = s.prefixItems.length
-      s.minItems.forall(m => a.length >= m || fail(ip, sp / "minItems",
-        s"${shown(value)} has less than $m ${items(m)}")) &&
-      s.maxItems.forall(m => a.length <= m || fail(ip, sp / "maxItems",
-        s"${shown(value)} has more than $m ${items(m)}")) &&
-      (!s.uniqueItems || allUnique(a) ||
-        fail(ip, sp / "uniqueItems", s"${shown(value)} has non-unique elements")) &&
+      s.minItems.forall(m => a.length >= m || fail(ip, sp / "minItems", out.fewItems(value, m))) &&
+      s.maxItems.forall(m => a.length <= m || fail(ip, sp / "maxItems", out.manyItems(value, m))) &&
+      (!s.uniqueItems || allUnique(a) || fail(ip, sp / "uniqueItems", out.notUnique(value))) &&
       (prefix == 0 || {
         val spp = sp / "prefixItems"
         indices(0, math.min(prefix, a.length))(i =>
@@ -500,29 +556,28 @@ object Interp {
       } &&
       s.contains.forall { csub =>
         val cn = a.count(trial(csub, _))
-        val lo = s.minContains.getOrElse(1L)
-        (cn >= lo || fail(ip, sp / "contains",
-          if (cn == 0 && s.minContains.isEmpty) s"None of ${shown(value)} are valid under the given schema"
-          else s"array contains $cn matching items, fewer than $lo")) &&
-        s.maxContains.forall(hi => cn <= hi || fail(ip, sp / "maxContains",
-          s"array contains $cn matching items, more than $hi"))
+        (cn >= s.minContains.getOrElse(1L) ||
+          fail(ip, sp / "contains", out.fewContained(value, cn, s.minContains))) &&
+        s.maxContains.forall(hi => cn <= hi || fail(ip, sp / "maxContains", out.manyContained(cn, hi)))
       } &&
       s.unevaluatedItems.forall { u =>
         val (allCov, covered, cont) = itemCov(s, value, c2, st)
         allCov || indices(0, a.length) { i =>
           i < covered || cont.exists(trial(_, a(i))) || trial(u, a(i)) ||
-            fail(ip / i, sp / "unevaluatedItems", s"unevaluated item at index $i is not allowed")
+            fail(ip / i, sp / "unevaluatedItems", out.unevaluatedItem(i))
         }
       }
     }
   }
 
-  private def typeMatches(ts: Set[JsonType], v: JsonValue): Boolean = {
-    val t = v.jsonType
-    ts.contains(t) || (t == JsonType.Integer && ts.contains(JsonType.Number))
+  /** `ts` admits `v`. A number under `number` is admitted without asking
+    * whether it is integral; only `integer` needs that. */
+  private[spec] def admits(ts: Set[JsonType], v: JsonValue): Boolean = v match {
+    case n: JNum => ts.contains(JsonType.Number) || (ts.contains(JsonType.Integer) && n.isIntegral)
+    case _       => ts.contains(v.jsonType)
   }
 
-  private def allUnique(a: Vector[JsonValue]): Boolean = {
+  private[spec] def allUnique(a: Vector[JsonValue]): Boolean = {
     var i = 0
     while (i < a.length) {
       var j = i + 1

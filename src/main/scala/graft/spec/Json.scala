@@ -23,25 +23,17 @@ final case class JBool(value: Boolean) extends JsonValue
 /** All numbers as BigDecimal: exact cross-representation comparison. */
 final case class JNum(value: BigDecimal) extends JsonValue {
   /** `1.0` counts as integer (`types.rs:192-245`). The check runs once
-    * per number in every `type` keyword hit, so it must not divide:
-    * `remainder(1)` inflates to BigInteger Knuth division and dominated
-    * whole-document validation on numeric-heavy payloads (GeoJSON
-    * coordinates). A decimal with scale s is integral iff its s lowest
-    * digits are zero — a long digit loop for the ubiquitous compact case. */
+    * per number in every `integer` type test, so it must not divide:
+    * `remainder(1)` inflates to BigInteger Knuth division. A decimal with
+    * scale s is integral iff its s lowest digits are zero. With fewer
+    * digits than s it lies strictly between -1 and 1; otherwise
+    * `stripTrailingZeros` decides, which on a compact decimal divides a
+    * long and builds no BigInteger (`unscaledValue` would build one for
+    * every fractional number). */
   @transient lazy val isIntegral: Boolean = {
-    val s = value.scale
-    if (s <= 0) true
-    else {
-      val u = value.underlying.unscaledValue
-      if (u.signum == 0) true
-      else if (u.bitLength <= 62) {
-        var v = Math.abs(u.longValueExact)
-        var k = s
-        var integral = true
-        while (integral && k > 0) { integral = v % 10 == 0; v /= 10; k -= 1 }
-        integral
-      } else value.underlying.stripTrailingZeros.scale <= 0
-    }
+    val b = value.underlying
+    val s = b.scale
+    s <= 0 || b.signum == 0 || (b.precision > s && b.stripTrailingZeros.scale <= 0)
   }
 }
 final case class JStr(value: String) extends JsonValue
